@@ -805,9 +805,7 @@ def q_supplier_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per part), the broadcast part join then attaches p_type to the
     # deduped pairs only, and both counts become plain count(*)s.
     # Identical semantics: counting distinct pairs that survive the
-    # part inner join == countDistinct over the joined rows, and both
-    # count tables carry exactly the suppliers present in supplied, so
-    # the inner re-join reproduces the single-aggregate row set.
+    # part inner join == countDistinct over the joined rows.
     # Measured 0.72 -> 0.54 s at sf0.1.
     pairs = li.select("l_suppkey", "l_partkey").distinct()
     supplied = pairs.join(
@@ -818,9 +816,7 @@ def q_supplier_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("product_count")
     )
     # isNotNull guard keeps countDistinct's exact NULL semantics (a
-    # distinct+count would tally a NULL type as one category); p_type
-    # is non-null in the generated data, so the filter is row-neutral
-    # there but makes the rewrite data-independent
+    # distinct+count would tally a NULL type as one category)
     category_counts = (
         supplied.select("l_suppkey", "p_type")
         .where(F.col("p_type").isNotNull())
@@ -828,7 +824,9 @@ def q_supplier_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_suppkey")
         .agg(F.count(F.lit(1)).alias("category_count"))
     )
-    metrics = product_counts.join(category_counts, "l_suppkey")
+    # left join: a supplier whose parts all have a NULL p_type has
+    # products but no category row, and must keep category_count 0
+    metrics = product_counts.join(category_counts, "l_suppkey", "left")
     return (
         s.join(metrics, s.s_suppkey == metrics.l_suppkey, "left")
         .select(

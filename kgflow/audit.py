@@ -126,6 +126,21 @@ def jvm_gc_ms(spark) -> "int | None":
         return None
 
 
+def jvm_compile_ms(spark) -> "int | None":
+    """Cumulative JIT compile time (ms) of the driver JVM's compiler
+    threads via its CompilationMXBean: in local[N] mode the whole
+    runtime's compile cost, which a cold batch job pays on top of its
+    data work. Same coverage caveat as jvm_gc_ms; None if the JVM does
+    not monitor compile time."""
+    try:
+        bean = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+        if bean is None or not bean.isCompilationTimeMonitoringSupported():
+            return None
+        return int(bean.getTotalCompilationTime())
+    except Exception:
+        return None
+
+
 @dataclass
 class CpuWindow:
     """steal/iowait/other-process percentages over a start()..stop()

@@ -109,11 +109,17 @@ def _hyperplane(dim: int, plane: int) -> list[float]:
     return vals
 
 
+_NON_FINITE_SQL = {"inf": "Infinity", "-inf": "-Infinity", "nan": "NaN"}
+
+
 def _double_sql(v: float) -> str:
     """Exact SQL double literal: repr() is shortest-round-trip, the D
     suffix keeps the parser from reading a decimal (exponent forms are
-    already DOUBLE)."""
+    already DOUBLE). Non-finite values have no literal form and are
+    cast from Spark's special-value strings."""
     r = repr(float(v))
+    if r in _NON_FINITE_SQL:
+        return f"CAST('{_NON_FINITE_SQL[r]}' AS DOUBLE)"
     return r if ("e" in r or "E" in r) else r + "D"
 
 

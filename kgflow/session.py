@@ -13,6 +13,35 @@ import os
 
 from pyspark.sql import SparkSession
 
+# JIT compile policy for a cold batch job. HotSpot's tier-4 (C2)
+# thresholds (JDK 17: 5000/600/15000/40000) are sized for long-lived
+# servers: in a ~35 s pipeline run (perfbench kg_bulk, 4 vCPUs) the C2
+# threads burned 56 of the JVM's 116 CPU-s compiling lukewarm planner
+# and codegen methods the job never ran long enough to repay. 10x
+# thresholds leave those at C1 and still C2-compile the hot loops
+# (regex, sha2, parquet decode) early enough that executor-task CPU is
+# unchanged; a long job reaches the same steady state. 30x starved the
+# hot loops as well (task CPU +25%).
+JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of physical RAM, at least 1 GB: in local[N] mode the driver
+    JVM is the whole runtime, and the rest of the host is left to the
+    Python workers, the page cache and the OS. 4 GB where /proc/meminfo
+    cannot be read."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{max(1024, int(line.split()[1]) // 1024 // 2)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "4g"
+
 
 def get_spark(
     app_name: str = "kgflow",
@@ -53,7 +82,10 @@ def get_spark(
         # local mode = driver-only: this is the ONLY memory knob. Size it
         # to the host — 32 concurrent tasks over wide text rows in a small
         # heap spend their time in GC, not work.
-        .config("spark.driver.memory", os.environ.get("KGFLOW_DRIVER_MEM", "64g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("KGFLOW_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # G1 sizes ParallelGCThreads from visible CPUs (~23 on 32 vCPUs);
@@ -62,7 +94,7 @@ def get_spark(
         # (123s -> 10s). Cap them everywhere.
         .config(
             "spark.driver.extraJavaOptions",
-            "-XX:ParallelGCThreads=8 -XX:ConcGCThreads=2",
+            f"-XX:ParallelGCThreads=8 -XX:ConcGCThreads=2 {JIT_POLICY}",
         )
         # text-heavy rows compress hard in parquet: default 128 MB splits
         # leave most cores idle on corpora whose *decoded* cost is high.

@@ -29,7 +29,7 @@ SHINGLE_LEN = 3
 NUM_HASHES = 24
 BANDS = 8  # rows per band = NUM_HASHES // BANDS = 3
 JACCARD_THRESHOLD = 0.55
-BUCKET_CAP = 64  # LSH buckets larger than this are skew-dropped (logged via lineage)
+BUCKET_CAP = 64  # larger LSH buckets are skew-dropped; nothing counts the drops yet
 
 
 def _norm(col: F.Column) -> F.Column:

@@ -43,6 +43,28 @@ def _input_fingerprint(spark, path: str) -> str:
     return f"{path}#n={len(entries)}#ls={h}"
 
 
+def local_cluster_conf(master: str) -> tuple[dict[str, str], int]:
+    """Executor conf for a ``local-cluster[n_exec,cores,mem_mb]`` master,
+    and the cluster's total core count."""
+    from kgflow.session import JIT_POLICY
+
+    inner = master.split("[")[1].rstrip("]").split(",")
+    n_exec, exec_cores, mem_mb = int(inner[0]), int(inner[1]), int(inner[2])
+    return {
+        "spark.executor.memory": f"{max(mem_mb - 1024, 1024)}m",
+        # executor python workers must import kgflow
+        "spark.executorEnv.PYTHONPATH": os.path.dirname(os.path.abspath(__file__)),
+        # right-size each executor JVM's thread pools to its core
+        # slice; unbounded GC threads thrash this host (session.py);
+        # executors run the tasks, so they take the JIT policy too
+        "spark.executor.extraJavaOptions": (
+            f"-XX:ActiveProcessorCount={exec_cores} "
+            f"-XX:ParallelGCThreads={max(exec_cores // 2, 2)} -XX:ConcGCThreads=2 "
+            f"{JIT_POLICY}"
+        ),
+    }, n_exec * exec_cores
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description="kgflow KG-construction pipeline")
     src = ap.add_mutually_exclusive_group(required=True)
@@ -92,23 +114,9 @@ def main(argv: list[str] | None = None) -> int:
     from kgflow.pipeline import run_pipeline
     from kgflow.session import get_spark
 
-    extra = {}
-    total_cores = None
+    extra, total_cores = {}, None
     if args.master and args.master.startswith("local-cluster"):
-        inner = args.master.split("[")[1].rstrip("]").split(",")
-        n_exec, exec_cores, mem_mb = int(inner[0]), int(inner[1]), int(inner[2])
-        total_cores = n_exec * exec_cores
-        extra = {
-            "spark.executor.memory": f"{max(mem_mb - 1024, 1024)}m",
-            # executor python workers must import kgflow
-            "spark.executorEnv.PYTHONPATH": os.path.dirname(os.path.abspath(__file__)),
-            # right-size each executor JVM's thread pools to its core
-            # slice; unbounded GC threads thrash this host (session.py)
-            "spark.executor.extraJavaOptions": (
-                f"-XX:ActiveProcessorCount={exec_cores} "
-                f"-XX:ParallelGCThreads={max(exec_cores // 2, 2)} -XX:ConcGCThreads=2"
-            ),
-        }
+        extra, total_cores = local_cluster_conf(args.master)
     spark = get_spark(
         "kgflow-pipeline",
         cores=args.cores,
@@ -135,6 +143,7 @@ def main(argv: list[str] | None = None) -> int:
 
     cpu0 = audit._own_cpu_seconds()
     gc0 = audit.jvm_gc_ms(spark)
+    jit0 = audit.jvm_compile_ms(spark)
     t0 = time.monotonic()
     report = run_pipeline(
         spark,
@@ -152,6 +161,7 @@ def main(argv: list[str] | None = None) -> int:
     elapsed = time.monotonic() - t0
     cpu1 = audit._own_cpu_seconds()
     gc1 = audit.jvm_gc_ms(spark)
+    jit1 = audit.jvm_compile_ms(spark)
 
     summary = {
         "elapsed_sec": round(elapsed, 2),
@@ -167,6 +177,9 @@ def main(argv: list[str] | None = None) -> int:
             round(cpu1 - cpu0, 2) if cpu0 is not None and cpu1 is not None else None
         ),
         "gc_ms": int(gc1 - gc0) if gc0 is not None and gc1 is not None else None,
+        # driver-JVM JIT compile time over the same window: a cold job
+        # pays it on top of its data work (session.JIT_POLICY)
+        "jit_ms": int(jit1 - jit0) if jit0 is not None and jit1 is not None else None,
         "stages": {
             name: {"rows": r.row_count, "skipped": r.skipped, "sec": r.elapsed_sec,
                    "own_cpu_s": r.own_cpu_s, "gc_ms": r.gc_ms}

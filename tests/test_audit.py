@@ -155,3 +155,17 @@ def test_own_cpu_counts_reaped_child_exactly_once():
     # >= 2x the child burn
     assert burned >= child - 0.1, f"child burn missing from tree: {burned:.2f}s"
     assert burned < 2 * child, f"reaped-child CPU double-counted: {burned:.2f}s"
+
+
+def test_jvm_compile_ms_counts_up_across_a_query(spark):
+    from kgflow.audit import jvm_compile_ms
+
+    before = jvm_compile_ms(spark)
+    (
+        spark.range(50_000)
+        .selectExpr("id % 7 AS k", "sha2(cast(id AS string), 256) AS h")
+        .groupBy("k").count().collect()
+    )
+    after = jvm_compile_ms(spark)
+    assert before is not None and after is not None
+    assert after >= before

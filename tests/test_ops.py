@@ -717,3 +717,16 @@ def test_train_centroids_wide_quantizer_join_path(spark):
     # trained table plugs into the stored-index path at wide widths too
     asg = similarity.ivf_assignments(vectors, dim=16, centroids=trained)
     assert asg.count() == vectors.count()
+
+
+def test_double_sql_round_trips_non_finite_values(spark):
+    vals = [float("inf"), float("-inf"), float("nan"), -0.5, 1e-300, 3.0]
+    row = spark.sql(
+        "SELECT " + ", ".join(
+            f"{similarity._double_sql(v)} AS c{i}" for i, v in enumerate(vals)
+        )
+    ).first()
+    got = list(row)
+    assert got[0] == float("inf") and got[1] == float("-inf")
+    assert got[2] != got[2]  # NaN
+    assert got[3:] == vals[3:]

@@ -32,19 +32,19 @@ def _norm_cell(v):
     return v
 
 
-def _spark_rows(spark, name):
-    df = QUERIES[name](spark, SF_DIR)
+def _spark_rows(spark, name, sf_dir=SF_DIR):
+    df = QUERIES[name](spark, sf_dir)
     cols = sorted(df.columns)
     return sorted(
         tuple(_norm_cell(r[c]) for c in cols) for r in df.collect()
     ), cols
 
 
-def _duck_rows(name):
+def _duck_rows(name, sf_dir=SF_DIR, tables=TABLES):
     con = duckdb.connect()
-    for t in TABLES:
+    for t in tables:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
     res = con.execute(ORACLE_SQL[name])
     cols = [d[0] for d in res.description]
@@ -72,3 +72,34 @@ def test_rows_only_queries_run(spark, name):
     df = QUERIES[name](spark, SF_DIR)
     assert df.count() >= 0
     assert df.columns
+
+
+def test_supplier_risk_keeps_supplier_with_only_null_types(spark, tmp_path):
+    """A supplier whose parts all have a NULL p_type still has products:
+    it must report product_count > 0 and category_count 0, as the
+    oracle's count(DISTINCT p_type) does, not drop to (0, 0)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    tables = ("supplier", "part", "lineitem")
+    for t in ("supplier", "lineitem"):
+        pq.write_table(pq.read_table(f"{SF_DIR}/{t}.parquet"), tmp_path / f"{t}.parquet")
+    li = pq.read_table(f"{SF_DIR}/lineitem.parquet", columns=["l_suppkey", "l_partkey"])
+    victim = li["l_suppkey"][0].as_py()
+    parts = pc.filter(li["l_partkey"], pc.equal(li["l_suppkey"], victim))
+    part = pq.read_table(f"{SF_DIR}/part.parquet")
+    nulled = pc.if_else(
+        pc.is_in(part["p_partkey"], value_set=pc.unique(parts)),
+        pa.scalar(None, pa.string()),
+        part["p_type"],
+    )
+    part = part.set_column(part.schema.get_field_index("p_type"), "p_type", nulled)
+    pq.write_table(part, tmp_path / "part.parquet")
+
+    got, cols = _spark_rows(spark, "supplier_risk", str(tmp_path))
+    want, want_cols = _duck_rows("supplier_risk", str(tmp_path), tables)
+    assert cols == want_cols
+    assert got == want
+    row = dict(zip(cols, next(r for r in got if r[cols.index("s_suppkey")] == victim)))
+    assert row["product_count"] > 0 and row["category_count"] == 0
