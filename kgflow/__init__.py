@@ -6,9 +6,9 @@ into a four-stage DataFrame job over a source-code repository table:
 
     ingest -> extract -> link -> canonicalize -> materialize
 
-Everything is declarative DataFrame/Catalyst; the only Python on the
-datapath is Arrow-vectorized (pandas UDF) extraction, and even that has
-a pure-native (JVM regexp) twin used as the default fast path.
+Everything is declarative DataFrame/Catalyst: extraction is JVM
+regexp_extract_all and the content hash is the builtin sha2, so no
+Python runs on the pipeline's datapath.
 
 Design notes (vs the reference, cited by file:line in each module):
   * stages communicate only through stage-output tables (the one

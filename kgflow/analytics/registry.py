@@ -387,7 +387,7 @@ def _kg_triples(spark: SparkSession, sf: str) -> DataFrame:
 
     n = 500  # fixed deterministic corpus regardless of sf_dir
     return (
-        extract(ingest(fixtures.source_files(spark, n)), engine="native")
+        extract(ingest(fixtures.source_files(spark, n)))
         .select("subj", "pred", "obj")
         .distinct()
     )
@@ -414,7 +414,7 @@ def _kg_canonical_map(spark: SparkSession, sf: str) -> DataFrame:
     from kgflow.stages.ingest import ingest
     from kgflow.stages.link import norm_alias_edges, symbol_dictionary
 
-    triples = extract(ingest(fixtures.source_files(spark, 500)), engine="native")
+    triples = extract(ingest(fixtures.source_files(spark, 500)))
     return canonical_map(norm_alias_edges(symbol_dictionary(triples))).select(
         "member", "canonical"
     )

@@ -159,6 +159,15 @@ def write_stage(
             manifest = json.load(f)
         return StageResult(stage, data_path, fp, manifest["row_count"], skipped=True)
 
+    # the overwrite below deletes the old data before it writes the new,
+    # so a write that dies part-way leaves a missing or partial table:
+    # drop the completion marker first, or a rerun under the old
+    # fingerprint would resume that table as complete
+    try:
+        os.remove(_manifest_path(stage_dir))
+    except FileNotFoundError:
+        pass
+
     import time
 
     t0 = time.monotonic()

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from kgflow import audit
 from kgflow import lineage as lin
 from kgflow.stages.canonicalize import canonical_map
-from kgflow.stages.extract import extract, extract_with_manifest
+from kgflow.stages.extract import extract
 from kgflow.stages.ingest import ingest, ingest_manifest
 from kgflow.stages.link import link
 from kgflow.stages.materialize import (
@@ -59,12 +59,9 @@ def run_pipeline(
     run_dir: str,
     corpus_fingerprint: str,
     run_ts: str = "1970-01-01T00:00:00Z",
-    extraction_engine: str = "native",
     fuzzy_linking: bool = True,
     out_partitions: int | None = None,
     validate: bool = True,
-    manifest_join: str = "auto",
-    manifest_broadcast_threshold: int = 2_000_000,
     schema_mode: str = "overwrite",
 ) -> PipelineReport:
     """Run (or resume) the full pipeline, writing stage tables under run_dir.
@@ -72,22 +69,7 @@ def run_pipeline(
     ``corpus_fingerprint`` identifies the input data; stage fingerprints
     chain from it, so a resume on the same corpus skips completed stages
     and a corpus change invalidates all of them.
-
-    ``manifest_join`` picks how extraction re-attaches the ingest
-    manifest's content_sha (see extract_with_manifest): ``broadcast``
-    ships the narrow manifest to every executor, ``bucketed`` shuffles
-    both sides on file_id — the 10^12-file path. ``auto`` (default)
-    switches on the ingested row count: at or below
-    ``manifest_broadcast_threshold`` files (~100 bytes/row, so the
-    default 2M rows is a ~200 MB broadcast) it broadcasts, above it it
-    buckets. The join strategy is NOT part of the stage fingerprint —
-    outputs are byte-identical either way, so a resume may switch
-    strategies freely.
     """
-    if manifest_join not in ("auto", "broadcast", "bucketed"):
-        raise ValueError(
-            f"manifest_join must be auto|broadcast|bucketed, got {manifest_join!r}"
-        )
     if schema_mode not in ("overwrite", "merge"):
         raise ValueError(f"schema_mode must be overwrite|merge, got {schema_mode!r}")
     report = PipelineReport()
@@ -138,33 +120,14 @@ def run_pipeline(
     fp0 = lin.fingerprint(
         {"corpus": corpus_fingerprint, "schema_mode": schema_mode}
     )
-    # persisted ingest table is metadata-only (no content rewrite);
-    # the corpus payload is sha-hashed exactly ONCE here — extraction
-    # propagates the sha by file_id (broadcast join) instead of paying
-    # a second full Arrow+hash pass
+    # the persisted ingest table is the metadata-only lineage anchor
+    # (no content rewrite); triples hash the content again inline in
+    # their own scan (F.sha2, whole-stage codegen), the same
+    # extract(ingest(...)) the streaming path runs
     stage("ingested", fp0, lambda: ingest_manifest(source))
-    manifest = lin.read_stage(spark, run_dir, "ingested")
 
-    if manifest_join == "auto":
-        use_broadcast = (
-            report.results["ingested"].row_count <= manifest_broadcast_threshold
-        )
-    else:
-        use_broadcast = manifest_join == "broadcast"
-
-    fp1 = lin.fingerprint({"engine": extraction_engine}, fp0)
-    stage(
-        "triples",
-        fp1,
-        lambda: extract_with_manifest(
-            source, manifest, engine=extraction_engine, broadcast=use_broadcast,
-            # the manifest is the ingest stage's own output over a
-            # source keyed by (repo, path, commit) — unique by
-            # construction, so skip the defensive dedup shuffle that
-            # otherwise blocks the broadcast build (round-7, guide §2.4)
-            assume_unique=True,
-        ),
-    )
+    fp1 = lin.fingerprint({}, fp0)
+    stage("triples", fp1, lambda: extract(ingest(source)))
     triples = lin.read_stage(spark, run_dir, "triples")
 
     fp2 = lin.fingerprint({"fuzzy": fuzzy_linking}, fp1)

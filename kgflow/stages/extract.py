@@ -1,19 +1,12 @@
 """Stage 2 — triple extraction: mention detection over file content.
 
-Two interchangeable engines with byte-identical output (a pytest
-asserts equality on the fixture corpus):
-
-  * ``engine="native"`` (default): pure JVM ``regexp_extract_all`` +
-    higher-order array functions — stays inside whole-stage codegen,
-    zero Python on the datapath. This is the 100 TB fast path.
-  * ``engine="pandas"``: the Arrow-vectorized pandas-UDF extractor the
-    north_star describes ("batched regex + tree-sitter-style mention
-    detection"); the slot where a real tree-sitter parse would plug in
-    on a cluster with native libs available.
-
-Both are pure per-row functions of (lang, content) — no cross-row
-state — so Arrow batch boundaries and partitioning cannot change the
-output (SURVEY.md §7.4 determinism requirement).
+Pure JVM ``regexp_extract_all`` + higher-order array functions: stays
+inside whole-stage codegen, zero Python on the datapath. A pure per-row
+function of (lang, content) — no cross-row state — so partitioning
+cannot change the output (SURVEY.md §7.4 determinism requirement).
+Batch (``pipeline.run_pipeline``) and stream
+(``streaming.incremental``) both build triples as
+``extract(ingest(source))``.
 
 The reference's only extraction analogue is expression-level
 projection of already-structured rows (graph-transformation.py:77-116);
@@ -29,12 +22,10 @@ Emitted predicates (north_star):
 
 from __future__ import annotations
 
-import re
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kgflow.stages.ingest import ingest
 
 # Identifier char classes written with explicit unicode ranges so the
 # JVM regex engine (ASCII \w) and Python's re (unicode \w) agree.
@@ -43,9 +34,9 @@ _IDC = "[A-Za-z0-9_\u00c0-\uffef]"
 IDENT = f"{_ID0}{_IDC}*"
 DOTTED = f"{IDENT}(?:\\.{IDENT})*"
 
-# (lang, predicate, regex-with-one-capture-group). Shared verbatim by
-# both engines; every construct used is portable between java.util.regex
-# and Python re.
+# (lang, predicate, regex-with-one-capture-group). Every construct used
+# is portable between java.util.regex and Python re; the tests check
+# extract() against a Python-re reference over the same RULES.
 RULES: list[tuple[str, str, str]] = [
     ("python", "IMPORTS", rf"(?m)^import\s+({DOTTED})"),
     ("python", "IMPORTS", rf"(?m)^from\s+({DOTTED})\s+import"),
@@ -72,14 +63,16 @@ RULES: list[tuple[str, str, str]] = [
 _LANGS = sorted({lang for lang, _, _ in RULES})
 
 
-def _file_ref() -> F.Column:
-    return F.concat_ws("/", F.col("repo"), F.col("path"))
+def extract(ingested: DataFrame) -> DataFrame:
+    """ingested -> candidate triples (subj, pred, obj, src_sha, repo, lang).
 
-
-def _extract_native(ingested: DataFrame) -> DataFrame:
-    """JVM-only mention detection: regexp_extract_all per rule, arrays
-    tagged with their predicate via transform(), concatenated, exploded.
-    One narrow stage — no shuffle until the caller aggregates."""
+    regexp_extract_all per rule, arrays tagged with their predicate via
+    transform(), concatenated, exploded: one narrow stage, no shuffle
+    until the caller aggregates. Match order within one (rule, row) is
+    document order; duplicates are preserved here (frequency may matter
+    to downstream scoring) — dedup happens at materialize (reference
+    MERGE semantics, neo4j-loading.py:230-234).
+    """
     def tagger(pred: str):
         # single-arg lambda: a 2-arg lambda would be treated as
         # (element, index) by F.transform
@@ -87,8 +80,7 @@ def _extract_native(ingested: DataFrame) -> DataFrame:
 
     # NULL content must behave like empty content: regexp_extract_all of
     # NULL is NULL, and concat-with-NULL nulls the whole mention array,
-    # which would silently drop the WRITTEN_IN triple the pandas engine
-    # still emits (engine-equivalence bug found in round-1 review)
+    # which would silently drop the file's WRITTEN_IN triple
     content = F.coalesce(F.col("content"), F.lit(""))
     per_lang = []
     for lang in _LANGS:
@@ -116,7 +108,8 @@ def _extract_native(ingested: DataFrame) -> DataFrame:
 
     exploded = (
         ingested.select(
-            "repo", "lang", "content_sha", _file_ref().alias("file_ref"),
+            "repo", "lang", "content_sha",
+            F.concat_ws("/", "repo", "path").alias("file_ref"),
             F.explode(mentions).alias("m"),
         )
     )
@@ -132,134 +125,15 @@ def _extract_native(ingested: DataFrame) -> DataFrame:
     )
 
 
-_COMPILED: dict[str, list[tuple[str, re.Pattern]]] = {}
+def extract_with_manifest(source: DataFrame, manifest: DataFrame, **_ignored) -> DataFrame:
+    """Alias for ``extract(ingest(source))``; ``manifest`` and every
+    keyword argument are ignored.
 
-
-def _compiled_rules(lang: str) -> list[tuple[str, re.Pattern]]:
-    if lang not in _COMPILED:
-        _COMPILED[lang] = [
-            (pred, re.compile(pattern))
-            for rule_lang, pred, pattern in RULES
-            if rule_lang == lang
-        ]
-    return _COMPILED.get(lang, [])
-
-
-def _extract_pandas(ingested: DataFrame) -> DataFrame:
-    """Arrow-vectorized twin of _extract_native — the extension point
-    for tree-sitter-style parsing. Pure per-row function of
-    (lang, content); emits the same rows as the native engine."""
-
-    def detect(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple[str, str, str, str, str, str]] = []
-            for repo, lang, sha, file_ref, content in zip(
-                pdf["repo"], pdf["lang"], pdf["content_sha"],
-                pdf["file_ref"], pdf["content"],
-            ):
-                out.append((file_ref, "WRITTEN_IN", lang, sha, repo, lang))
-                if not content:
-                    continue
-                for pred, rx in _compiled_rules(lang):
-                    for obj in rx.findall(content):
-                        subj = repo if pred == "DECLARES" else file_ref
-                        out.append((subj, pred, obj, sha, repo, lang))
-            yield pd.DataFrame(
-                out, columns=["subj", "pred", "obj", "src_sha", "repo", "lang"]
-            )
-
-    narrowed = ingested.select(
-        "repo", "lang", "content_sha", _file_ref().alias("file_ref"), "content"
-    )
-    return narrowed.mapInPandas(
-        detect,
-        schema="subj string, pred string, obj string, src_sha string, "
-        "repo string, lang string",
-    )
-
-
-def extract(ingested: DataFrame, engine: str = "native") -> DataFrame:
-    """ingested -> candidate triples (subj, pred, obj, src_sha, repo, lang).
-
-    Match order within one (rule, row) is document order in both engines;
-    duplicates are preserved here (frequency may matter to downstream
-    scoring) — dedup happens at materialize (reference MERGE semantics,
-    neo4j-loading.py:230-234).
+    Kept only because the benchmark harness (``perfbench/workloads.py``)
+    imports this name at module level and its traced run calls it as
+    ``(source, manifest, engine="native", broadcast=...,
+    assume_unique=True)``; through this alias that run measures the same
+    extract path ``run_pipeline`` runs. ROADMAP direction 1 moves the
+    harness onto ``run_pipeline`` and deletes this alias.
     """
-    if engine == "native":
-        return _extract_native(ingested)
-    if engine == "pandas":
-        return _extract_pandas(ingested)
-    raise ValueError(f"unknown extraction engine: {engine!r}")
-
-
-def extract_with_manifest(
-    source: DataFrame,
-    manifest: DataFrame,
-    engine: str = "native",
-    broadcast: bool = True,
-    buckets: int = 256,
-    assume_unique: bool = False,
-) -> DataFrame:
-    """Extraction that PROPAGATES the ingest manifest's content_sha by
-    file_id instead of recomputing it — hash once, join by key.
-
-    The corpus payload is hashed exactly once (in the ingest-manifest
-    pass); extraction carries the lock-free xxhash file_id through the
-    sha slot and swaps the real sha back in with a join on the narrow
-    manifest. Two join modes:
-
-      * ``broadcast=True`` (default): manifest ships to every executor —
-        right up to O(10^8) files, after which it exceeds driver memory;
-      * ``broadcast=False``: both sides repartition on file_id and join
-        shuffle-hash — the 10^12-file path SCALE.md §2 promises; the
-        triples side shuffles once on a key it already carries, the
-        manifest side is narrow (file_id, content_sha).
-
-    The manifest MUST be unique per file_id: (repo, path, commit) is the
-    contract key of the source table, and a duplicate entry would fan
-    every triple out N times (and could attach the wrong sha). Enforced
-    here with dropDuplicates rather than trusted — EXCEPT when the
-    caller passes ``assume_unique=True``: the dedup shuffle of the
-    narrow side sits on the broadcast-build critical path (the big scan
-    cannot start until manifest scan -> exchange -> dedup -> collect
-    completes) and measured 6-7 s of a fresh-JVM pipeline run at 200k
-    files (round-7, guide §2.4: remove shuffles on already-unique
-    data). The pipeline sets it: its manifest is the ingest stage's own
-    output over a source whose contract key IS (repo, path, commit), so
-    the dedup is a no-op there by construction.
-
-    The invariant is unchanged: src_sha equals sha256(content) of the
-    originating row (tests assert equality against an inline recompute).
-    """
-    keyed = source.select(
-        "repo",
-        "path",
-        "commit",
-        "lang",
-        "content",
-        F.concat(
-            F.lpad(F.hex(F.xxhash64("repo", "path", "commit")), 16, "0"),
-            F.lpad(F.hex(F.xxhash64("commit", "path", "repo")), 16, "0"),
-        ).alias("content_sha"),  # file_id riding the sha slot until the join
-    )
-    trip = extract(keyed, engine=engine)
-    narrow = manifest.select("file_id", "content_sha")
-    if not assume_unique:
-        narrow = narrow.dropDuplicates(["file_id"])
-    trip = trip.withColumnRenamed("src_sha", "file_id")
-    if broadcast:
-        joined = trip.join(F.broadcast(narrow), "file_id")
-    else:
-        joined = (
-            trip.repartition(buckets, "file_id")
-            .join(narrow.repartition(buckets, "file_id").hint("shuffle_hash"), "file_id")
-        )
-    return joined.select(
-        "subj",
-        "pred",
-        "obj",
-        F.col("content_sha").alias("src_sha"),
-        "repo",
-        "lang",
-    )
+    return extract(ingest(source))

@@ -28,7 +28,6 @@ def incremental_extract(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    engine: str = "native",
     available_now: bool = True,
 ) -> StreamingQuery:
     """Start the incremental extraction stream; returns the query.
@@ -42,7 +41,7 @@ def incremental_extract(
         .option("maxFilesPerTrigger", 16)
         .parquet(input_dir)
     )
-    triples = extract(ingest(stream), engine=engine)
+    triples = extract(ingest(stream))
     return (
         triples.writeStream.format("parquet")
         .option("path", output_dir)

@@ -72,8 +72,6 @@ def main(argv: list[str] | None = None) -> int:
     src.add_argument("--synthetic", type=int, metavar="N_FILES",
                      help="generate the deterministic synthetic corpus instead")
     ap.add_argument("--output", required=True, help="run directory for stage tables")
-    ap.add_argument("--engine", choices=["native", "pandas"], default="native",
-                    help="extraction engine (default: native JVM regex)")
     ap.add_argument("--cores", type=int, default=None, help="local[N] parallelism")
     ap.add_argument("--master", default=None,
                     help="override master URL, e.g. local-cluster[4,8,8192]")
@@ -86,17 +84,6 @@ def main(argv: list[str] | None = None) -> int:
         "and a repartition would shuffle the full payload for nothing.",
     )
     ap.add_argument("--no-fuzzy", action="store_true", help="disable LSH alias linking")
-    ap.add_argument(
-        "--manifest-join", choices=["auto", "broadcast", "bucketed"], default="auto",
-        help="how extraction re-attaches the manifest sha: broadcast the "
-        "narrow manifest, shuffle-bucket both sides (the 10^9+-file "
-        "path), or auto-switch on ingested row count (default)",
-    )
-    ap.add_argument(
-        "--manifest-broadcast-threshold", type=int, default=2_000_000,
-        help="auto mode: max ingested files that still broadcast "
-        "(~100 B/row -> default 2M rows is a ~200 MB broadcast)",
-    )
     ap.add_argument(
         "--schema-mode", choices=["overwrite", "merge"], default="overwrite",
         help="stage-table schema policy on re-run: overwrite replaces "
@@ -151,11 +138,8 @@ def main(argv: list[str] | None = None) -> int:
         args.output,
         corpus_fingerprint=corpus_fp,
         run_ts=args.run_ts,
-        extraction_engine=args.engine,
         fuzzy_linking=not args.no_fuzzy,
         out_partitions=args.out_partitions,
-        manifest_join=args.manifest_join,
-        manifest_broadcast_threshold=args.manifest_broadcast_threshold,
         schema_mode=args.schema_mode,
     )
     elapsed = time.monotonic() - t0

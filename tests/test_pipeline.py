@@ -87,58 +87,35 @@ def test_resume_output_identical(spark, base_run, run_copy):
     assert before == after
 
 
-def test_pipeline_bucketed_manifest_join_identical(spark, base_run, tmp_path):
-    """The orchestrator's bucketed (shuffle-hash) manifest-join path —
-    the 10^9+-file configuration — produces byte-identical triples to
-    the default broadcast run. manifest_broadcast_threshold=0 also
-    exercises the auto-switch: any corpus larger than 0 rows buckets."""
-    base_dir, _ = base_run
-    src = fixtures.source_files(spark, N_FILES)
-    bucketed_dir = str(tmp_path / "run_bucketed")
-    report = run_pipeline(
-        spark, src, bucketed_dir, corpus_fingerprint=FP,
-        manifest_join="auto", manifest_broadcast_threshold=0,
+def test_stored_triples_src_sha_matches_ingested(spark, base_run):
+    """The ingested and triples stages hash content in two separate
+    scans; their stored tables must agree: every triple's src_sha is an
+    ingested content_sha, every ingested file has its WRITTEN_IN triple,
+    and the stored triples are exactly extract(ingest(source))."""
+    from kgflow.stages.extract import extract
+    from kgflow.stages.ingest import ingest
+
+    run_dir, _ = base_run
+    ingested = lin.read_stage(spark, run_dir, "ingested")
+    triples = lin.read_stage(spark, run_dir, "triples")
+
+    orphans = triples.join(
+        ingested.select(F.col("content_sha").alias("src_sha")), "src_sha", "left_anti"
     )
-    assert report.triples_emitted > 0
+    assert orphans.isEmpty()
 
-    def rows(d):
-        return sorted(
-            map(tuple, lin.read_stage(spark, d, "triples").collect())
-        )
-
-    assert rows(base_dir) == rows(bucketed_dir)
-
-
-def test_manifest_auto_switch_broadcasts_below_threshold(spark, tmp_path):
-    """auto mode with the corpus below the threshold must take the
-    broadcast path — asserted via the executed plan of the same join
-    the orchestrator builds (BroadcastExchange present), the inverse of
-    the bucketed-path plan test in test_extract.py."""
-    from kgflow.stages.extract import extract_with_manifest
-    from kgflow.stages.ingest import ingest_manifest
-
-    src = fixtures.source_files(spark, 50)
-    joined = extract_with_manifest(
-        src, ingest_manifest(src), engine="native", broadcast=True
+    written_in = triples.where(F.col("pred") == "WRITTEN_IN").select(
+        F.col("subj").alias("file_ref"), F.col("obj").alias("lang"),
+        F.col("src_sha").alias("content_sha"),
     )
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" in plan
-    # and the orchestrator maps (rows <= threshold) -> broadcast
-    run_dir = str(tmp_path / "run")
-    report = run_pipeline(
-        spark, src, run_dir, corpus_fingerprint="auto-bcast",
-        manifest_join="auto", manifest_broadcast_threshold=1_000_000,
-    )
-    assert report.triples_emitted > 0
+    unwritten = ingested.select(
+        F.concat_ws("/", "repo", "path").alias("file_ref"), "lang", "content_sha"
+    ).join(written_in, ["file_ref", "lang", "content_sha"], "left_anti")
+    assert unwritten.isEmpty()
 
-
-def test_manifest_join_rejects_unknown_mode(spark, tmp_path):
-    src = fixtures.source_files(spark, 5)
-    with pytest.raises(ValueError, match="manifest_join"):
-        run_pipeline(
-            spark, src, str(tmp_path / "r"), corpus_fingerprint="x",
-            manifest_join="bogus",
-        )
+    inline = extract(ingest(fixtures.source_files(spark, N_FILES)))
+    assert triples.exceptAll(inline).isEmpty()
+    assert inline.exceptAll(triples).isEmpty()
 
 
 def test_corpus_change_invalidates_downstream(spark, run_copy):
@@ -169,6 +146,26 @@ def test_write_stage_schema_evolution_merge(spark, tmp_path):
     # customer_recommendations_writeback.py:144)
     lin.write_stage(v2, "s", run_dir, "fp-v3", "1970-01-01T00:00:00Z")
     assert lin.read_stage(spark, run_dir, "s").columns == ["id", "new_prop"]
+
+
+def test_failed_rewrite_invalidates_completed_stage(spark, tmp_path):
+    """A stage complete under fingerprint A, then rewritten under B by a
+    write that dies part-way: the overwrite has already deleted A's
+    data, so A's manifest must no longer mark the stage complete."""
+    run_dir = str(tmp_path / "run")
+    stage_dir = os.path.join(run_dir, "s")
+    ok = spark.range(100).withColumn("v", F.col("id") * 2)
+    lin.write_stage(ok, "s", run_dir, "fp-A", "1970-01-01T00:00:00Z")
+    assert lin.is_complete(stage_dir, "fp-A")
+
+    dies = spark.range(100).withColumn(
+        "v", F.when(F.col("id") == 57, F.raise_error(F.lit("killed mid-write")))
+        .otherwise(F.col("id"))
+    )
+    with pytest.raises(Exception, match="killed mid-write"):
+        lin.write_stage(dies, "s", run_dir, "fp-B", "1970-01-01T00:00:00Z")
+    assert not lin.is_complete(stage_dir, "fp-A")
+    assert not lin.is_complete(stage_dir, "fp-B")
 
 
 def test_lineage_per_partition_counts_sum_to_total(spark, base_run):

@@ -64,7 +64,7 @@ def test_extraction_is_single_narrow_stage(spark):
     from kgflow.stages.extract import extract
     from kgflow.stages.ingest import ingest
 
-    df = extract(ingest(fixtures.source_files(spark, 50)), engine="native")
+    df = extract(ingest(fixtures.source_files(spark, 50)))
     plan = plan_of(df, mode="simple")
     assert "Exchange" not in plan
 

@@ -135,7 +135,7 @@ def test_minhash_estimates_jaccard(spark, set_a, set_b):
 
 def test_extraction_invariant_to_partitioning(spark):
     src = fixtures.source_files(spark, 80)
-    one = extract(ingest(src.repartition(1)), engine="native")
-    many = extract(ingest(src.repartition(13)), engine="native")
+    one = extract(ingest(src.repartition(1)))
+    many = extract(ingest(src.repartition(13)))
     assert one.exceptAll(many).isEmpty()
     assert many.exceptAll(one).isEmpty()

@@ -46,7 +46,7 @@ def test_incremental_equals_batch_and_is_exactly_once(spark, tmp_path):
     q.awaitTermination(120)
 
     streamed = spark.read.parquet(out)
-    batch = extract(ingest(spark.read.parquet(inp)), engine="native")
+    batch = extract(ingest(spark.read.parquet(inp)))
     assert streamed.exceptAll(batch).isEmpty()
     assert batch.exceptAll(streamed).isEmpty()
 
