@@ -406,8 +406,9 @@ def _kg_canonical_map(spark: SparkSession, sf: str) -> DataFrame:
     alias edges are exactly the norm-equality star edges, so components
     are exactly the norm groups — which DuckDB can recompute from the
     frozen golden with a groupBy, no recursion needed. The Spark side
-    still runs the REAL iterative CC loop; a wrong fixpoint (split or
-    merged component, wrong canonical pick) hash-mismatches."""
+    still runs the REAL iterative CC loop and its star-forest stop; a
+    wrong fixpoint (split or merged component, wrong canonical pick)
+    hash-mismatches."""
     from kgflow import fixtures
     from kgflow.stages.canonicalize import canonical_map
     from kgflow.stages.extract import extract

@@ -379,9 +379,8 @@ def q_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (collect_set dedups in the same exchange the old distinct paid),
     each order contributing each pair once. Round-7 shape: in-group
     pair expansion (_pair_structs) instead of the self-join — one
-    exchange on l_orderkey replaces two distinct-shuffles plus the join
-    (plans/r07/copurchase_pairs_{before,after}.txt), with identical
-    output by construction."""
+    exchange on l_orderkey replaces two distinct-shuffles plus the join,
+    with identical output by construction."""
     li = load(spark, sf_dir, "lineitem")
     per_order = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("parts")
@@ -676,8 +675,7 @@ def q_copurchase_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
         # callers can release_caches() after their terminal action.
     )
     purchases = track_persist(purchases)
-    # Round-7 similarity shape (guide §2.3/§2.4,
-    # plans/r07/copurchase_recommendations_{before,after}.txt): the
+    # Round-7 similarity shape (guide §2.3/§2.4): the
     # viral parts are dropped FIRST with the count-based hot list +
     # broadcast anti-join (counting is O(1) memory per group — a
     # collect_set-then-size() filter would materialize a 10^5-buyer

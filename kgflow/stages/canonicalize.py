@@ -3,9 +3,12 @@
 Iterative large-star / small-star (Kiveris et al., "Connected
 Components in MapReduce and Beyond", SoCC'14 — see PAPERS.md) expressed
 as pure DataFrame rounds: each round is groupBy(min) + join, lineage is
-cut with localCheckpoint every round, and convergence is an exact
-edge-set fixpoint check. O(log n) rounds on pathological graphs; alias
-graphs converge in 2-3.
+cut with localCheckpoint every round, and the loop stops as soon as the
+edges form a star forest (every src has one dst, no dst is a src).
+That stop is exact: small-star emits only src > dst edges, so each
+star's centre is its component minimum, and both star operations map
+such a forest to itself. O(log n) rounds on pathological graphs; alias
+graphs are star forests after 1-2.
 
 The node ordering required by the algorithm is the symbol string's
 natural (lexicographic) order — total, deterministic, and stable across
@@ -58,6 +61,20 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True when no src has a second edge, as src or as dst: every src
+    then has exactly one dst and no dst is a src (edges are distinct)."""
+    ends = edges.select(F.col("src").alias("node"), F.lit(1).alias("is_src")).unionAll(
+        edges.select(F.col("dst").alias("node"), F.lit(0).alias("is_src"))
+    )
+    return (
+        ends.groupBy("node")
+        .agg(F.max("is_src").alias("is_src"), F.count(F.lit(1)).alias("n"))
+        .where((F.col("is_src") == 1) & (F.col("n") > 1))
+        .isEmpty()
+    )
+
+
 def connected_components(alias_edges: DataFrame) -> DataFrame:
     """(src, dst) undirected edges -> (member, canonical) assignment.
 
@@ -65,43 +82,15 @@ def connected_components(alias_edges: DataFrame) -> DataFrame:
     with no alias edge) are implicitly canonical and simply absent from
     the returned map — callers coalesce to identity.
     """
-    edges = (
-        alias_edges.where(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _fingerprint(e: DataFrame) -> tuple:
-        # order-insensitive edge-set fingerprint in ONE aggregate —
-        # far cheaper than exceptAll anti-joins per round
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal(38,0) sum: order-insensitive and overflow-proof
-            # (ANSI mode would reject a plain long sum of 64-bit hashes)
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("hsum"),
-        ).collect()[0]
-        return (row.n, row.hsum)
-
-    prev_fp = _fingerprint(edges)
-    # empty-graph early-out reuses the fingerprint's count — the
-    # previous separate isEmpty() cost one more Spark job per run
-    if prev_fp[0] == 0:
-        return edges.select(F.col("src").alias("member"), F.col("dst").alias("canonical"))
+    edges = alias_edges.select("src", "dst")
     for _ in range(MAX_ITERATIONS):
-        grown = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        fp = _fingerprint(grown)
-        edges = grown
-        if fp == prev_fp:
-            break
-        prev_fp = fp
-    else:
-        raise RuntimeError(
-            f"connected components did not converge in {MAX_ITERATIONS} iterations"
-        )
-
-    # Fixpoint is a star forest: every edge points member -> component min.
-    return edges.select(F.col("src").alias("member"), F.col("dst").alias("canonical"))
+        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        if _is_star_forest(edges):
+            # every edge points member -> component min
+            return edges.select(F.col("src").alias("member"), F.col("dst").alias("canonical"))
+    raise RuntimeError(
+        f"connected components did not converge in {MAX_ITERATIONS} iterations"
+    )
 
 
 def canonical_map(alias_edges: DataFrame) -> DataFrame:
@@ -109,4 +98,5 @@ def canonical_map(alias_edges: DataFrame) -> DataFrame:
     downstream joins can use an inner/left join uniformly."""
     cc = connected_components(alias_edges)
     centers = cc.select(F.col("canonical").alias("member"), F.col("canonical")).distinct()
-    return cc.unionByName(centers).dropDuplicates(["member"])
+    # srcs of a star forest are unique and never centres: already keyed on member
+    return cc.unionByName(centers)

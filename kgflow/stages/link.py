@@ -69,8 +69,10 @@ def norm_alias_edges(dictionary: DataFrame) -> DataFrame:
     )
 
 
-def _shingles(col: F.Column) -> F.Column:
-    padded = F.concat(F.lit("^"), col, F.lit("$"))
+def _shingles(padded: F.Column) -> F.Column:
+    """Distinct character shingles of an already-bound padded column.
+    Pass a bound column (F.col), not an inline expression: the lambda
+    re-evaluates its captured expression once per element."""
     n = F.greatest(F.length(padded) - (SHINGLE_LEN - 1), F.lit(1))
     return F.array_distinct(
         F.transform(
@@ -97,17 +99,6 @@ def minhash_signature_from_shingles(sh_col: F.Column) -> F.Column:
     )
 
 
-def minhash_signature(col: F.Column) -> F.Column:
-    """array<long> of NUM_HASHES min-hashes over character shingles.
-
-    xxhash64(shingle, seed_j) per hash function — entirely JVM-side;
-    the classic (a*x+b) mod p family is unnecessary when a seeded
-    64-bit hash is available as a builtin. Prefer
-    minhash_signature_from_shingles with a materialized shingle column
-    on hot paths (see its docstring)."""
-    return minhash_signature_from_shingles(_shingles(col))
-
-
 def lsh_alias_edges(dictionary: DataFrame) -> DataFrame:
     """Fuzzy alias candidates via banded minhash, verified by exact
     Jaccard over shingle sets.
@@ -120,32 +111,18 @@ def lsh_alias_edges(dictionary: DataFrame) -> DataFrame:
     pairs would be quadratic; precision is protected by the verify step
     and recall by the remaining bands).
     """
-    # Round-7 binding fix (measured 25.4 -> ~3 s of build wall at 500k
-    # files): the old inline _shingles(_norm(symbol)) /
-    # minhash_signature(_norm(symbol)) re-ran the normalization regex
-    # and the whole shingle transform once per lambda ELEMENT and once
-    # per hash transform — interpreted HOFs re-evaluate inline
-    # subexpressions per element, and the signature referenced the
-    # shingle expression NUM_HASHES times. Materialize the padded
-    # string, then the shingle array, then compute the signature from
-    # the bound column: identical values (the dictionary's norm column
-    # IS _norm(symbol)), each piece computed once per row.
+    # Bind the padded string, then the shingle array, then compute the
+    # signature from the bound column, so each piece is computed once
+    # per row: interpreted HOFs re-evaluate inline subexpressions per
+    # element, and the signature reads the shingles NUM_HASHES times
+    # (inline, this cost 25.4 s of build wall at 500k files; bound, ~3 s).
+    # The dictionary's norm column IS _norm(symbol).
     padded = dictionary.select(
         "symbol",
         "norm",
         F.concat(F.lit("^"), F.col("norm"), F.lit("$")).alias("p"),
     )
-    n_sh = F.greatest(F.length("p") - (SHINGLE_LEN - 1), F.lit(1))
-    shingled = padded.select(
-        "symbol",
-        "norm",
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n_sh),
-                lambda i: F.substring(F.col("p"), i, SHINGLE_LEN),
-            )
-        ).alias("sh"),
-    )
+    shingled = padded.select("symbol", "norm", _shingles(F.col("p")).alias("sh"))
     with_sig = shingled.select(
         "symbol",
         "norm",
@@ -209,5 +186,8 @@ def link(triples: DataFrame, fuzzy: bool = True) -> tuple[DataFrame, DataFrame]:
     dictionary = symbol_dictionary(triples).localCheckpoint(eager=True)
     edges = norm_alias_edges(dictionary)
     if fuzzy:
-        edges = edges.unionByName(lsh_alias_edges(dictionary)).dropDuplicates(["src", "dst"])
+        # disjoint, no dedup needed: norm edges join norm-equal symbols
+        # (each once, the dictionary is grouped by symbol); LSH edges are
+        # deduplicated and filtered to norm_a != norm_b
+        edges = edges.unionByName(lsh_alias_edges(dictionary))
     return dictionary, edges

@@ -5,9 +5,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from kgflow.stages.link import (
+    _shingles,
     link,
     lsh_alias_edges,
-    minhash_signature,
+    minhash_signature_from_shingles,
     norm_alias_edges,
     symbol_dictionary,
 )
@@ -35,10 +36,12 @@ def test_norm_aliases_link_case_and_underscore_variants(spark):
 
 
 def test_minhash_signature_deterministic_and_partition_invariant(spark):
-    df1 = spark.createDataFrame([("alpha_beta",)], "s string").repartition(1)
-    df4 = spark.createDataFrame([("alpha_beta",)], "s string").repartition(4)
-    sig1 = df1.select(minhash_signature(F.col("s")).alias("sig")).collect()[0].sig
-    sig4 = df4.select(minhash_signature(F.col("s")).alias("sig")).collect()[0].sig
+    def sig(df):
+        sh = df.select(_shingles(F.col("s")).alias("sh"))
+        return sh.select(minhash_signature_from_shingles(F.col("sh")).alias("sig")).collect()[0].sig
+
+    sig1 = sig(spark.createDataFrame([("^alpha_beta$",)], "s string").repartition(1))
+    sig4 = sig(spark.createDataFrame([("^alpha_beta$",)], "s string").repartition(4))
     assert sig1 == sig4
     assert len(sig1) == 24
 
@@ -55,12 +58,20 @@ def test_lsh_finds_near_duplicate_symbols(spark):
 
 
 def test_link_end_to_end_dedupes_edges(spark):
-    d_syms = ["merge_rows", "mergeRows", "MERGE_ROWS"]
+    # the configuration_* family fires both the norm and the LSH rule,
+    # whose edge sets link unions without a dedup
+    d_syms = [
+        "merge_rows", "mergeRows", "MERGE_ROWS",
+        "configuration_loader", "configurationLoader", "configuration_loadder",
+    ]
     triples = spark.createDataFrame(
         [("r", "DECLARES", s, "sha", "r", "python") for s in d_syms * 2],
         "subj string, pred string, obj string, src_sha string, repo string, lang string",
     )
     _, edges = link(triples)
-    rows = edges.collect()
-    assert len(rows) == len({(r.src, r.dst) for r in rows})  # no dup edges
-    assert len(rows) >= 2
+    pairs = [(r.src, r.dst) for r in edges.collect()]
+    assert len(pairs) == len(set(pairs))  # no dup edges
+    assert not {(b, a) for a, b in pairs} & set(pairs)  # nor both orientations
+    assert len(pairs) >= 4
+    lsh = {(r.src, r.dst) for r in lsh_alias_edges(symbol_dictionary(triples)).collect()}
+    assert {p for p in lsh if "configuration_loadder" in p}  # the LSH rule fired
