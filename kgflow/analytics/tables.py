@@ -23,9 +23,9 @@ TABLES = (
 # static tables 1-5x per build; reusing the logical-plan handle removes
 # that fixed cost (guide §1.2 — plan-build overhead dominated several
 # sub-second queries). This caches NO data or results: execution still
-# scans the parquet files every run. The driver test tables are
-# immutable per directory; anything that rewrites a path it re-reads
-# must keep using spark.read directly.
+# scans the parquet files every run. A handle keeps the file listing it
+# was built with, so code that rewrites tables under a directory in
+# place calls invalidate(dir) before loading them again.
 _HANDLES: "dict[tuple[int, str, str], DataFrame]" = {}
 
 
@@ -37,9 +37,21 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if df is None:
         # bound the cache so a long-lived process cycling sessions or
         # data dirs cannot pin handles (and their sessions) forever;
-        # 4x the table count covers several concurrent dirs
-        if len(_HANDLES) >= 4 * len(TABLES) * 4:
-            _HANDLES.clear()
+        # 4x the table count covers several concurrent dirs. Dicts keep
+        # insertion order, so the first key is the oldest handle.
+        if len(_HANDLES) >= 4 * len(TABLES):
+            del _HANDLES[next(iter(_HANDLES))]
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         _HANDLES[key] = df
     return df
+
+
+def invalidate(sf_dir: str) -> None:
+    """Forget the cached handles on ``sf_dir``'s tables and the cached
+    embedding width of its ``embeddings`` table, so the next query
+    build reads the tables as they are now."""
+    from kgflow.analytics import registry  # registry imports this module
+
+    for key in [k for k in _HANDLES if k[1] == sf_dir]:
+        del _HANDLES[key]
+    registry._DIM_CACHE.pop(sf_dir, None)

@@ -187,16 +187,19 @@ def main(argv: list[str] | None = None) -> int:
     # and the bench's co-tenant CPU audit (kgflow/audit.py) counts
     # exactly such un-reaped ticks as foreign load, falsely flagging
     # every fresh-subprocess pipeline iteration as contaminated
-    # (measured ~12% spurious other_busy at 60k files). Terminate +
-    # wait rolls the JVM's rusage into this process, which the parent's
+    # (measured ~12% spurious other_busy at 60k files). Ending the JVM
+    # and waiting rolls its rusage into this process, which the parent's
     # RUSAGE_CHILDREN snapshot then attributes correctly. The timed
-    # summary above is unaffected (already printed).
+    # summary above is unaffected (already printed). EOF on the JVM's
+    # stdin makes the gateway call System.exit(0); a SIGTERM exit (143)
+    # would discard the class-data-sharing archive a first run dumps
+    # (kgflow/session.py).
     if argv is None:
         proc = getattr(getattr(spark.sparkContext, "_gateway", None), "proc", None)
         spark.stop()
         if proc is not None:
             try:
-                proc.terminate()
+                proc.stdin.close()
                 proc.wait(timeout=30)
             except Exception:
                 pass

@@ -103,3 +103,43 @@ def test_supplier_risk_keeps_supplier_with_only_null_types(spark, tmp_path):
     assert got == want
     row = dict(zip(cols, next(r for r in got if r[cols.index("s_suppkey")] == victim)))
     assert row["product_count"] > 0 and row["category_count"] == 0
+
+
+def test_invalidate_rereads_tables_rewritten_in_place(spark, tmp_path):
+    """After tables.invalidate(dir), a table rewritten in place loads with
+    its new rows, and the ANN queries' embedding width is read again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kgflow.analytics import registry, tables
+
+    def write(n_regions, width):
+        pq.write_table(pa.table({"r_regionkey": list(range(n_regions))}),
+                       tmp_path / "region.parquet")
+        pq.write_table(pa.table({"id": [0, 1], "embedding": [[0.5] * width] * 2}),
+                       tmp_path / "embeddings.parquet")
+
+    sf = str(tmp_path)
+    write(2, 4)
+    assert tables.load(spark, sf, "region").count() == 2
+    assert registry._embedding_dim(spark, sf) == 4
+    write(3, 8)
+    tables.invalidate(sf)
+    assert tables.load(spark, sf, "region").count() == 3
+    assert registry._embedding_dim(spark, sf) == 8
+
+
+def test_handle_cache_evicts_oldest_at_four_times_table_count(monkeypatch):
+    from kgflow.analytics import tables
+
+    class FakeSpark:
+        class read:
+            parquet = staticmethod(lambda path: path)
+
+    monkeypatch.setattr(tables, "_HANDLES", {})
+    bound = 4 * len(tables.TABLES)
+    for i in range(bound + 1):
+        tables.load(FakeSpark, f"/d{i}", "region")
+    assert len(tables._HANDLES) == bound
+    dirs = [k[1] for k in tables._HANDLES]
+    assert "/d0" not in dirs and dirs[-1] == f"/d{bound}"
