@@ -27,7 +27,6 @@ import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def fingerprint(params: dict, upstream: str | None = None) -> str:
@@ -55,21 +54,41 @@ def _manifest_path(stage_dir: str) -> str:
     return os.path.join(stage_dir, "_MANIFEST.json")
 
 
-def is_complete(stage_dir: str, fp: str) -> bool:
+def _complete_manifest(stage_dir: str, fp: str) -> "dict | None":
+    """The stage's manifest if it marks the stage complete under ``fp``."""
     mp = _manifest_path(stage_dir)
     if not os.path.exists(mp):
-        return False
+        return None
     with open(mp) as f:
         manifest = json.load(f)
-    return manifest.get("fingerprint") == fp and manifest.get("status") == "complete"
+    if manifest.get("fingerprint") != fp or manifest.get("status") != "complete":
+        return None
+    return manifest
 
 
-def _footer_counts(data_path: str) -> "list[tuple[str, int]] | None":
+def is_complete(stage_dir: str, fp: str) -> bool:
+    return _complete_manifest(stage_dir, fp) is not None
+
+
+def completed(run_dir: str, stage: str, fp: str) -> "StageResult | None":
+    """The skipped-stage result when the stage is complete under ``fp``,
+    else None. The row count comes from the manifest, so resuming a
+    stage reads no data."""
+    stage_dir = os.path.join(run_dir, stage)
+    manifest = _complete_manifest(stage_dir, fp)
+    if manifest is None:
+        return None
+    return StageResult(
+        stage, os.path.join(stage_dir, "data"), fp, manifest["row_count"], skipped=True
+    )
+
+
+def _footer_counts(data_path: str) -> list[tuple[str, int]]:
     """Per-file row counts straight from parquet FOOTERS — no Spark job,
     no data scan. Each output file is one write task's partition, so
     this IS the per-partition lineage; footers are O(files) driver-side
-    metadata reads (~ms each). Returns None when the path isn't a local
-    directory of parquet files (caller falls back to the Spark scan).
+    metadata reads (~ms each). A 0-row write still leaves one 0-row
+    part file, so a written stage always has at least one entry.
 
     This replaced a Spark re-read + groupBy(input_file_name) pass: that
     pass re-scanned every stage output and was the largest share of the
@@ -78,86 +97,26 @@ def _footer_counts(data_path: str) -> "list[tuple[str, int]] | None":
     inter-stage critical path."""
     import pyarrow.parquet as pq
 
-    if not os.path.isdir(data_path):
-        return None
     out = []
-    try:
-        for name in sorted(os.listdir(data_path)):
-            if not name.endswith(".parquet") or name.startswith(("_", ".")):
-                continue
-            full = os.path.join(data_path, name)
-            out.append((full, pq.ParquetFile(full).metadata.num_rows))
-    except Exception:
-        return None
-    return out or None
+    for name in sorted(os.listdir(data_path)):
+        if not name.endswith(".parquet") or name.startswith(("_", ".")):
+            continue
+        full = os.path.join(data_path, name)
+        out.append((full, pq.ParquetFile(full).metadata.num_rows))
+    return out
 
 
-def per_file_counts(spark: SparkSession, data_path: str) -> DataFrame:
-    """Per-output-file row counts (lineage). Footer-based fast path;
-    Spark scan fallback for non-local paths."""
-    rows = _footer_counts(data_path)
-    if rows is not None:
-        return spark.createDataFrame(rows, "file string, row_count long")
-    return (
-        spark.read.parquet(data_path)
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(F.count(F.lit(1)).alias("row_count"))
-    )
-
-
-def merge_to_schema(df: DataFrame, old: "DataFrame | None") -> DataFrame:
-    """Schema-evolution overlay (the reference's Delta ``mergeSchema``
-    write option, csv-ingestion.py:191): align ``df`` to the UNION of
-    its own columns and the previous table version's.
-
-    Columns the new data dropped survive as typed nulls (their dtype
-    taken from the old schema); columns the new data added simply
-    appear. Column order = old order, then new-only columns in the new
-    data's order, so re-runs after adding a property need no manual
-    table cleanup. A column present in both with a different type keeps
-    the NEW type — the reference's ``overwriteSchema`` semantics
-    (customer_recommendations_writeback.py:144) for the conflicting
-    column only. Pure projection: no shuffle, no data scan of the old
-    table (only its footer-derived schema is consulted)."""
-    if old is None:
-        return df
-    new_cols = {c.lower(): c for c in df.columns}
-    cols = []
-    for f in old.schema.fields:
-        hit = new_cols.pop(f.name.lower(), None)
-        if hit is not None:
-            cols.append(F.col(hit))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    cols.extend(F.col(c) for c in new_cols.values())
-    return df.select(*cols)
-
-
-def write_stage(
-    df: DataFrame,
-    stage: str,
-    run_dir: str,
-    fp: str,
-    run_ts: str,
-    schema_mode: str = "overwrite",
-) -> StageResult:
+def write_stage(df: DataFrame, stage: str, run_dir: str, fp: str, run_ts: str) -> StageResult:
     """Write a stage table + lineage + manifest. Idempotent per fingerprint.
 
-    ``schema_mode='overwrite'`` (default) replaces the table and its
-    schema wholesale — the reference's ``overwriteSchema`` path.
-    ``schema_mode='merge'`` evolves instead: the previous version's
-    columns are retained as typed nulls when the new data lacks them
-    (see merge_to_schema) — the reference's ``mergeSchema`` path."""
-    if schema_mode not in ("overwrite", "merge"):
-        raise ValueError(f"schema_mode must be overwrite|merge, got {schema_mode!r}")
-    spark = df.sparkSession
+    The write replaces the table and its schema wholesale. The run dir
+    must be a local path: the lineage table and the manifest are written
+    from the driver."""
+    done = completed(run_dir, stage, fp)
+    if done is not None:
+        return done
     stage_dir = os.path.join(run_dir, stage)
     data_path = os.path.join(stage_dir, "data")
-
-    if is_complete(stage_dir, fp):
-        with open(_manifest_path(stage_dir)) as f:
-            manifest = json.load(f)
-        return StageResult(stage, data_path, fp, manifest["row_count"], skipped=True)
 
     # the overwrite below deletes the old data before it writes the new,
     # so a write that dies part-way leaves a missing or partial table:
@@ -171,51 +130,30 @@ def write_stage(
     import time
 
     t0 = time.monotonic()
-    if schema_mode == "merge" and os.path.exists(data_path):
-        try:
-            old = spark.read.parquet(data_path)
-        except Exception:
-            old = None  # unreadable/partial previous version: plain overwrite
-        df = merge_to_schema(df, old)
     df.write.mode("overwrite").parquet(data_path)
 
     # per-file counts from parquet footers (no Spark job), written as a
     # single-file parquet lineage table directly from the driver — the
-    # table is O(output files); removing the former re-scan + coalesce(1)
-    # write job cuts serial seconds from every stage boundary (the
-    # scaling audit's Amdahl term)
-    lineage_path = os.path.join(stage_dir, "lineage")
+    # table is O(output files), and a Spark re-scan + write job would add
+    # serial seconds to every stage boundary (the scaling audit's Amdahl
+    # term)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     footer = _footer_counts(data_path)
-    if footer is not None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        # overwrite semantics: a previous run may have written Spark-named
-        # files (part-00000-<uuid>.snappy.parquet) here via the fallback
-        # path — clear the directory or re-runs under a new fingerprint
-        # would read old+new lineage rows side by side
-        import shutil
-
-        shutil.rmtree(lineage_path, ignore_errors=True)
-        os.makedirs(lineage_path, exist_ok=True)
-        pq.write_table(
-            pa.table(
-                {
-                    "file": [f for f, _ in footer],
-                    "row_count": pa.array([n for _, n in footer], pa.int64()),
-                    "stage": [stage] * len(footer),
-                }
-            ),
-            os.path.join(lineage_path, "part-00000.parquet"),
-        )
-        row_count = sum(n for _, n in footer)
-    else:
-        counts = per_file_counts(spark, data_path).collect()
-        spark.createDataFrame(
-            [(r.file, r.row_count, stage) for r in counts],
-            "file string, row_count long, stage string",
-        ).coalesce(1).write.mode("overwrite").parquet(lineage_path)
-        row_count = sum(r.row_count for r in counts)
+    lineage_path = os.path.join(stage_dir, "lineage")
+    os.makedirs(lineage_path, exist_ok=True)
+    pq.write_table(
+        pa.table(
+            {
+                "file": [f for f, _ in footer],
+                "row_count": pa.array([n for _, n in footer], pa.int64()),
+                "stage": [stage] * len(footer),
+            }
+        ),
+        os.path.join(lineage_path, "part-00000.parquet"),
+    )
+    row_count = sum(n for _, n in footer)
 
     elapsed = round(time.monotonic() - t0, 3)
     manifest = {

@@ -59,10 +59,8 @@ def run_pipeline(
     run_dir: str,
     corpus_fingerprint: str,
     run_ts: str = "1970-01-01T00:00:00Z",
-    fuzzy_linking: bool = True,
     out_partitions: int | None = None,
     validate: bool = True,
-    schema_mode: str = "overwrite",
 ) -> PipelineReport:
     """Run (or resume) the full pipeline, writing stage tables under run_dir.
 
@@ -70,18 +68,11 @@ def run_pipeline(
     chain from it, so a resume on the same corpus skips completed stages
     and a corpus change invalidates all of them.
     """
-    if schema_mode not in ("overwrite", "merge"):
-        raise ValueError(f"schema_mode must be overwrite|merge, got {schema_mode!r}")
     report = PipelineReport()
 
     def stage(name: str, fp: str, build) -> lin.StageResult:
-        stage_dir_fp = fp
-        if lin.is_complete(f"{run_dir}/{name}", stage_dir_fp):
-            res = lin.StageResult(
-                name, f"{run_dir}/{name}/data", fp,
-                _manifest_rows(run_dir, name), skipped=True,
-            )
-        else:
+        res = lin.completed(run_dir, name, fp)
+        if res is None:
             # per-stage CPU + GC telemetry: own-tree CPU-seconds and
             # driver-JVM GC ms around exactly this stage's window, so a
             # run-to-run own-CPU spread on identical input is
@@ -102,9 +93,7 @@ def run_pipeline(
             build_wall = _time.monotonic() - _tb
             if build_wall >= 0.05:
                 report.sections[f"build_{name}"] = round(build_wall, 3)
-            res = lin.write_stage(
-                df, name, run_dir, fp, run_ts, schema_mode=schema_mode
-            )
+            res = lin.write_stage(df, name, run_dir, fp, run_ts)
             cpu1 = audit._own_cpu_seconds()
             gc1 = audit.jvm_gc_ms(spark)
             if cpu0 is not None and cpu1 is not None:
@@ -114,12 +103,7 @@ def run_pipeline(
         report.results[name] = res
         return res
 
-    # schema_mode is part of the fingerprint chain: switching
-    # overwrite<->merge re-runs every stage instead of silently
-    # resuming tables written under the other schema policy
-    fp0 = lin.fingerprint(
-        {"corpus": corpus_fingerprint, "schema_mode": schema_mode}
-    )
+    fp0 = lin.fingerprint({"corpus": corpus_fingerprint})
     # the persisted ingest table is the metadata-only lineage anchor
     # (no content rewrite); triples hash the content again inline in
     # their own scan (F.sha2, whole-stage codegen), the same
@@ -130,8 +114,8 @@ def run_pipeline(
     stage("triples", fp1, lambda: extract(ingest(source)))
     triples = lin.read_stage(spark, run_dir, "triples")
 
-    fp2 = lin.fingerprint({"fuzzy": fuzzy_linking}, fp1)
-    stage("alias_edges", fp2, lambda: link(triples, fuzzy=fuzzy_linking)[1])
+    fp2 = lin.fingerprint({}, fp1)
+    stage("alias_edges", fp2, lambda: link(triples)[1])
     alias_edges = lin.read_stage(spark, run_dir, "alias_edges")
 
     fp3 = lin.fingerprint({}, fp2)
@@ -173,11 +157,3 @@ def run_pipeline(
             fe.result()
         report.sections["validate"] = round(_time.monotonic() - _t0, 3)
     return report
-
-
-def _manifest_rows(run_dir: str, name: str) -> int:
-    import json
-    import os
-
-    with open(os.path.join(run_dir, name, "_MANIFEST.json")) as f:
-        return json.load(f)["row_count"]

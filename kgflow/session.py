@@ -23,7 +23,8 @@ That run pays for it: session start is about 3 s slower, and the dump
 adds 10-16 s at exit and writes 140-195 MB. The dump goes to a
 per-process temporary file, and an ``atexit`` hook publishes it only if
 the JVM exited cleanly, so two first runs cannot race and a killed JVM
-never leaves a truncated archive behind.
+never leaves a truncated archive behind. A dump whose Python process
+was killed is never published; the next launch deletes it.
 
 A JVM cannot dump while a non-empty directory is on its classpath, and
 the launch classpath starts with Spark's conf directory. So the archive
@@ -39,6 +40,7 @@ from __future__ import annotations
 
 import atexit
 import contextlib
+import glob
 import hashlib
 import os
 import shutil
@@ -102,7 +104,26 @@ def _cds_paths(java_opts: str) -> tuple[str, str] | None:
         return None
     if not os.access(root, os.W_OK):
         return None
+    _sweep_orphaned_dumps(root)
     return os.path.join(root, f"{key.hexdigest()[:20]}.jsa"), empty_conf
+
+
+def _sweep_orphaned_dumps(root: str) -> None:
+    """Delete the ``<hash>.jsa.<pid>.tmp`` dumps of dead processes. A
+    launch whose Python process is killed leaves its JVM to finish the
+    dump, and nothing publishes or deletes the file. A live pid's file
+    stays: a concurrent first run may still be writing it."""
+    for tmp in glob.glob(os.path.join(glob.escape(root), "*.jsa.*.tmp")):
+        pid = tmp.rsplit(".", 2)[1]
+        if not pid.isdigit():
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            with contextlib.suppress(OSError):
+                os.remove(tmp)
+        except (OSError, OverflowError):
+            pass  # alive under another user, or not a pid
 
 
 def _publish_archive(proc: subprocess.Popen, tmp: str, archive: str) -> None:

@@ -24,20 +24,12 @@ def ingest(source: DataFrame) -> DataFrame:
     """
     from kgflow.functions import sha256_hex
 
-    # canonical columns first, then any EXTRA source metadata columns
-    # (e.g. a later corpus version adds `branch`) — propagating them is
-    # what makes schema_mode="merge" reachable end-to-end: an evolved
-    # source flows into an evolved ingest table, and write_stage's
-    # merge_to_schema reconciles it with the previous version.
-    canonical = ["repo", "path", "commit", "lang", "content"]
-    extras = [c for c in source.columns if c not in canonical]
     return source.select(
         "repo",
         "path",
         "commit",
         "lang",
         "content",
-        *extras,
         # JVM-builtin sha256 (F.sha2 — whole-stage codegen; see
         # kgflow/functions.py for the round-7 re-measurement history).
         # NULL content hashes as the empty string so the sha invariant
@@ -52,10 +44,10 @@ def ingest(source: DataFrame) -> DataFrame:
         ).alias("file_id"),
         # stable lineage partition: a pure function of the row key, NOT
         # spark_partition_id() — the physical partitioning varies with
-        # cores/maxPartitionBytes/--input-partitions, which made the
-        # persisted ingest table non-reproducible across parallelism
-        # levels (round-1 advice). 1024 buckets bound per-partition
-        # lineage cardinality independent of cluster size.
+        # cores and maxPartitionBytes, which made the persisted ingest
+        # table non-reproducible across parallelism levels (round-1
+        # advice). 1024 buckets bound per-partition lineage cardinality
+        # independent of cluster size.
         F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(1024))
         .cast("int")
         .alias("ingest_partition"),

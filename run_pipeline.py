@@ -75,23 +75,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--cores", type=int, default=None, help="local[N] parallelism")
     ap.add_argument("--master", default=None,
                     help="override master URL, e.g. local-cluster[4,8,8192]")
-    ap.add_argument(
-        "--input-partitions", type=int, default=0,
-        help="repartition the input to N (0 = off, -1 = 3x cores). "
-        "Only useful when the corpus compresses so hard that byte-range "
-        "splits starve the cores; for normal corpora the scan splits "
-        "(spark.sql.files.maxPartitionBytes) already feed every core, "
-        "and a repartition would shuffle the full payload for nothing.",
-    )
-    ap.add_argument("--no-fuzzy", action="store_true", help="disable LSH alias linking")
-    ap.add_argument(
-        "--schema-mode", choices=["overwrite", "merge"], default="overwrite",
-        help="stage-table schema policy on re-run: overwrite replaces "
-        "the schema wholesale; merge evolves it (previous columns the "
-        "new data lacks survive as typed nulls — the reference's Delta "
-        "mergeSchema, csv-ingestion.py:191). Part of the fingerprint "
-        "chain, so switching modes never silently resumes.",
-    )
     ap.add_argument("--out-partitions", type=int, default=None)
     ap.add_argument("--run-ts", default="1970-01-01T00:00:00Z",
                     help="logical run timestamp recorded in manifests")
@@ -119,11 +102,6 @@ def main(argv: list[str] | None = None) -> int:
         corpus_fp = f"synthetic-n{args.synthetic}-seed{fixtures.SEED}"
     else:
         source = spark.read.parquet(args.input)
-        n_parts = args.input_partitions
-        if n_parts == -1:
-            n_parts = 3 * spark.sparkContext.defaultParallelism
-        if n_parts:
-            source = source.repartition(n_parts)
         corpus_fp = _input_fingerprint(spark, args.input)
 
     from kgflow import audit
@@ -138,9 +116,7 @@ def main(argv: list[str] | None = None) -> int:
         args.output,
         corpus_fingerprint=corpus_fp,
         run_ts=args.run_ts,
-        fuzzy_linking=not args.no_fuzzy,
         out_partitions=args.out_partitions,
-        schema_mode=args.schema_mode,
     )
     elapsed = time.monotonic() - t0
     cpu1 = audit._own_cpu_seconds()

@@ -1,5 +1,5 @@
 """Unit tests for training-data ops: planted near-dups, ANN recall,
-simhash banding, multimodal plumbing."""
+simhash banding."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from kgflow.ops import dedup, multimodal, similarity, text
+from kgflow.ops import dedup, similarity, text
 
 BASE = (
     "alpha beta gamma delta epsilon zeta eta theta iota kappa "
@@ -169,34 +169,6 @@ def test_langid_profiles_self_classification(spark):
     joined = docs.join(pred, "doc_id")
     acc = joined.where(F.col("lang") == F.col("predicted_lang")).count() / joined.count()
     assert acc >= 0.95
-
-
-def test_multimodal_feature_plumbing(spark):
-    rows = [
-        (1, "image", bytearray(b"\x01\x02\x03" * 50), ("image/png", 8, 8, None)),
-        (2, "image", bytearray(b"\x01\x02\x03" * 50), ("image/png", 8, 8, None)),
-        (3, "audio", None, ("audio/wav", None, None, 2000)),
-    ]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    feats = {r.asset_id: r.features for r in multimodal.extract_features(media).collect()}
-    assert feats[1] == feats[2]  # deterministic: same bytes -> same features
-    assert feats[3] == [0.0] * multimodal.FEATURE_DIM
-    assert len(feats[1]) == multimodal.FEATURE_DIM
-
-
-def test_multimodal_real_decoder_is_stubbed(spark):
-    rows = [(1, "image", bytearray(b"xx"), ("image/png", 1, 1, None))]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    with pytest.raises(Exception, match="NotImplementedError|imaging library"):
-        multimodal.extract_features(media, use_real_decoder=True).collect()
-
-
-def test_frame_sample_plan(spark):
-    rows = [(1, "video", None, ("video/mp4", 640, 480, 3500)),
-            (2, "image", None, ("image/png", 8, 8, None))]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    got = multimodal.frame_sample_plan(media, every_ms=1000).collect()
-    assert {(r.asset_id, r.frame_ts_ms) for r in got} == {(1, 0), (1, 1000), (1, 2000), (1, 3000)}
 
 
 def _pseudo_vectors(spark, n_clusters=20, per_cluster=10, dim=16):

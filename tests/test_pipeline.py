@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgflow import fixtures, lineage as lin
-from kgflow.pipeline import run_pipeline
+from kgflow.pipeline import STAGES, run_pipeline
 
 N_FILES = 150
 FP = f"fixture-n{N_FILES}"
@@ -124,28 +124,34 @@ def test_corpus_change_invalidates_downstream(spark, run_copy):
     assert report.skipped_stages() == []
 
 
-def test_write_stage_schema_evolution_merge(spark, tmp_path):
-    """S5 mergeSchema semantics (csv-ingestion.py:191): re-running a
-    stage after adding a column evolves the table; a column the new run
-    dropped survives as typed nulls — no manual cleanup between runs."""
+def test_write_stage_overwrite_replaces_schema(spark, tmp_path):
+    """Re-running a stage under a new fingerprint replaces the table and
+    its schema wholesale (overwriteSchema,
+    customer_recommendations_writeback.py:144)."""
     run_dir = str(tmp_path / "run")
     v1 = spark.createDataFrame([(1, "x")], "id long, old_prop string")
     lin.write_stage(v1, "s", run_dir, "fp-v1", "1970-01-01T00:00:00Z")
 
     v2 = spark.createDataFrame([(2, 3.5)], "id long, new_prop double")
-    res = lin.write_stage(
-        v2, "s", run_dir, "fp-v2", "1970-01-01T00:00:00Z", schema_mode="merge"
-    )
+    res = lin.write_stage(v2, "s", run_dir, "fp-v2", "1970-01-01T00:00:00Z")
     assert not res.skipped
     got = lin.read_stage(spark, run_dir, "s")
-    assert [f.name for f in got.schema.fields] == ["id", "old_prop", "new_prop"]
-    row = got.collect()[0]
-    assert (row.id, row.old_prop, row.new_prop) == (2, None, 3.5)
+    assert got.columns == ["id", "new_prop"]
+    assert [tuple(r) for r in got.collect()] == [(2, 3.5)]
 
-    # default mode still replaces the schema wholesale (overwriteSchema,
-    # customer_recommendations_writeback.py:144)
-    lin.write_stage(v2, "s", run_dir, "fp-v3", "1970-01-01T00:00:00Z")
-    assert lin.read_stage(spark, run_dir, "s").columns == ["id", "new_prop"]
+
+def test_write_stage_records_empty_stage_from_footers(spark, tmp_path):
+    """A 0-row stage still writes one 0-row part file, so its row count
+    and its one-row lineage table come from parquet footers."""
+    run_dir = str(tmp_path / "run")
+    empty = spark.range(10).where(F.col("id") < 0)
+    res = lin.write_stage(empty, "s", run_dir, "fp-empty", "1970-01-01T00:00:00Z")
+    assert res.row_count == 0
+    with open(os.path.join(run_dir, "s", "_MANIFEST.json")) as f:
+        assert json.load(f)["row_count"] == 0
+    lineage = spark.read.parquet(os.path.join(run_dir, "s", "lineage")).collect()
+    assert [(r.row_count, r.stage) for r in lineage] == [(0, "s")]
+    assert lin.completed(run_dir, "s", "fp-empty").row_count == 0
 
 
 def test_failed_rewrite_invalidates_completed_stage(spark, tmp_path):
@@ -202,55 +208,17 @@ def test_alias_variants_share_canonical_node(spark, base_run):
     assert groups, "fixture corpus produced no alias groups — test vacuous"
 
 
-def test_pipeline_schema_mode_merge_end_to_end(spark, tmp_path):
-    """The round-3 gap: merge_to_schema existed but was unreachable from
-    the orchestrator. Full run -> source gains a metadata column ->
-    re-run with schema_mode='merge' -> the ingested stage table carries
-    BOTH the new column and the v1 columns; a third run that drops the
-    column again under merge keeps it as typed nulls. Also asserts the
-    fingerprint chain re-ran (a schema change must never silently
-    resume)."""
-    run_dir = str(tmp_path / "run")
-    src_v1 = fixtures.source_files(spark, 60)
-    run_pipeline(spark, src_v1, run_dir, corpus_fingerprint="v1")
-
-    src_v2 = src_v1.withColumn("branch", F.lit("main"))
-    rep2 = run_pipeline(
-        spark, src_v2, run_dir, corpus_fingerprint="v2", schema_mode="merge"
-    )
-    assert not rep2.results["ingested"].skipped  # new corpus fp -> re-ran
-    ing = lin.read_stage(spark, run_dir, "ingested")
-    assert "branch" in ing.columns and "content_sha" in ing.columns
-    assert ing.where(F.col("branch") == "main").count() == ing.count()
-
-    # drop the column again: merge keeps it as typed nulls
-    rep3 = run_pipeline(
-        spark, src_v1, run_dir, corpus_fingerprint="v3", schema_mode="merge"
-    )
-    assert not rep3.results["ingested"].skipped
-    ing3 = lin.read_stage(spark, run_dir, "ingested")
-    assert "branch" in ing3.columns
-    assert ing3.where(F.col("branch").isNull()).count() == ing3.count()
-    assert ing3.schema["branch"].dataType.simpleString() == "string"
-
-    # switching schema_mode alone (same corpus) must also re-run, not
-    # resume the table written under the other policy
-    rep4 = run_pipeline(spark, src_v1, run_dir, corpus_fingerprint="v3")
-    assert not rep4.results["ingested"].skipped
-
-
-def test_cli_schema_mode_flag(tmp_path):
-    """--schema-mode reaches write_stage through the CLI (subprocess-free:
-    call main() in-process against a tiny synthetic corpus)."""
+def test_cli_in_process_keeps_the_shared_session(spark, tmp_path):
+    """main([...]) runs the pipeline in-process (no subprocess) and
+    leaves the caller's JVM running: only a script run reaps it."""
     import run_pipeline as cli
 
     out = str(tmp_path / "run")
-    rc = cli.main(
-        ["--synthetic", "30", "--output", out, "--schema-mode", "merge",
-         "--cores", "4"]
-    )
+    rc = cli.main(["--synthetic", "30", "--output", out, "--cores", "4"])
     assert rc == 0
-    assert os.path.exists(os.path.join(out, "ingested", "_MANIFEST.json"))
+    for name in STAGES:
+        assert os.path.exists(os.path.join(out, name, "_MANIFEST.json"))
+    assert spark.range(1).count() == 1
 
 
 def test_materialize_spreads_hot_node_across_partitions(spark):

@@ -117,6 +117,21 @@ sys.exit(0)
     assert _cache(tmp_path, "*.tmp") == []
 
 
+def test_session_sweeps_orphaned_dumps_of_dead_pids_only(tmp_path):
+    cds = tmp_path / "cache" / "kgflow" / "cds"
+    cds.mkdir(parents=True)
+    child = subprocess.Popen([sys.executable, "-c", ""])
+    child.wait()  # reaped: nothing runs under its pid any more
+    dead = cds / f"{'0' * 20}.jsa.{child.pid}.tmp"
+    live = cds / f"{'0' * 20}.jsa.{os.getpid()}.tmp"
+    dead.write_bytes(b"orphaned dump")
+    live.write_bytes(b"dump in progress")
+
+    _session(tmp_path)
+    assert not dead.exists()
+    assert live.exists()
+
+
 def test_live_spark_conf_dir_still_takes_effect(tmp_path):
     conf = tmp_path / "conf"
     conf.mkdir()
