@@ -146,15 +146,17 @@ _register(
     lambda spark, sf: similarity.brute_force_topk(
         load(spark, sf, "embeddings"), _queries_from_embeddings(spark, sf), k=5
     ),
-    """
-WITH q AS (
-  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qvec
-  FROM embeddings WHERE vec_id < 5
+    f"""
+WITH v AS (
+  {similarity._vectors_sql()}
+),
+q AS (
+  SELECT vec_id AS query_id, vec AS qvec FROM v WHERE vec_id < 5
 ),
 scored AS (
   SELECT q.query_id, e.vec_id,
-         round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qvec), 6) AS cos
-  FROM embeddings e JOIN q ON e.vec_id != q.query_id
+         round(list_cosine_similarity(e.vec, q.qvec), 6) AS cos
+  FROM v e JOIN q ON e.vec_id != q.query_id
 )
 SELECT query_id, vec_id, cos, rank FROM (
   SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
@@ -188,14 +190,14 @@ def _q_dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "dedup_embedding_cosine",
     _q_dedup_embedding_cosine,
-    """
+    f"""
 WITH planted AS (
   SELECT * FROM embeddings
   UNION ALL
   SELECT vec_id + 1000000 AS vec_id, embedding, label
   FROM embeddings WHERE vec_id % 10 = 0
 ),
-v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vec FROM planted)
+v AS ({similarity._vectors_sql("planted", "label")})
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
        round(list_cosine_similarity(a.vec, b.vec), 6) AS cos,
        'label_blocked' AS method
@@ -234,10 +236,7 @@ _register(
 # IVF-flat twin of the LSH path: nearest-centroid inverted lists with
 # nprobe probing (the other canonical ANN index family the task brief
 # names). Centroids are hash-seeded so the oracle embeds identical
-# constants — see similarity._centroid; the trained-centroid path
-# (similarity.train_centroids) is pinned by
-# tests/test_ops.py::test_trained_centroids_beat_hash_seeded_recall
-# and has no SQL oracle (k-means is not DuckDB-expressible).
+# constants — see similarity._centroid.
 _register(
     "ann_ivf_topk",
     lambda spark, sf: similarity.ivf_topk(

@@ -1,5 +1,5 @@
 """Large-scale training-data pipeline operators over the documents and
 embeddings tables: deduplication (exact, minhash-LSH, simhash, n-gram
-Jaccard), similarity search (brute-force + LSH-bucketed cosine top-k),
+Jaccard), similarity search (brute-force, LSH and IVF cosine top-k; IVF-PQ),
 and text analysis (quality scoring, token counting, fingerprinting,
 language ID)."""

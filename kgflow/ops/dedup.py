@@ -40,18 +40,6 @@ def _token_set(col) -> F.Column:
     return F.array_sort(F.array_distinct(_tokens(col)))
 
 
-def word_shingles(col, n: int = SHINGLE_N) -> F.Column:
-    """Token n-grams as strings: deterministic, order-preserving."""
-    toks = _tokens(col)
-    count = F.greatest(F.size(toks) - (n - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), count),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        )
-    )
-
-
 PLANT_EVERY = 10
 PLANT_OFFSET = 1_000_000
 
@@ -181,13 +169,12 @@ def minhash_lsh_pairs(
     # measured 2.88 -> 0.81 s at sf0.1 with identical signatures):
     #
     #  * tokens are MATERIALIZED as a column before the shingle
-    #    transform. Higher-order functions are interpreted and
-    #    re-evaluate inline subexpressions per ELEMENT, so the old
-    #    word_shingles(col("text")) re-split the full text once per
-    #    shingle slot (~500 splits of a 3 KB string per doc); a bound
-    #    column reference is a row-field read. (CollapseProject keeps
-    #    the projection split: the alias is referenced more than once
-    #    and split() is not cheap.)
+    #    transform: higher-order functions are interpreted and
+    #    re-evaluate inline subexpressions per ELEMENT, so an inline
+    #    split would run once per shingle slot; a bound column
+    #    reference is a row-field read. (CollapseProject keeps the
+    #    projection split: the alias is referenced more than once and
+    #    split() is not cheap.)
     #  * the NUM_HASHES min-hashes run as explode + one hash aggregate
     #    with NUM_HASHES min()s — whole-stage codegen end to end —
     #    instead of NUM_HASHES interpreted transform+array_min passes

@@ -11,33 +11,27 @@ reference).
 
 Design, Spark-first:
 
-  * Vectors are L2-NORMALIZED up front, so squared-L2 ADC ranking is
-    exactly cosine ranking (for unit vectors ||a-b||^2 = 2 - 2cos) —
-    keeps this module rank-compatible with similarity.py's cosine
-    top-k while using the standard L2 PQ formulation.
-  * Sub-codebooks are trained with the same Lloyd machinery as
-    similarity.train_centroids, but ALL m subspaces train in one
-    DataFrame pass per iteration: explode each vector into (sub,
-    svec) rows, broadcast-join the (sub, code, cvec) codebook table,
-    argmin via a map-side-combined min(struct) — never O(m*k) folded
-    plan nodes, so codebook width is unbounded (the ivf join-path
-    lesson applied from the start).
-  * Encoding is a deterministic expression of the vector given fixed
-    codebooks (same persist-the-codebooks contract as trained IVF
-    centroids); codes tables append incrementally like the other
-    at-rest indexes.
+  * Vectors are L2-NORMALIZED up front (similarity's vector prep, zero
+    norms dropped), so squared-L2 ADC ranking is exactly cosine ranking
+    (for unit vectors ||a-b||^2 = 2 - 2cos) — rank-compatible with
+    similarity.py's cosine top-k while using the standard L2 PQ
+    formulation.
+  * Sub-codebooks are hash-seeded constants (``_seed_codebooks``, the
+    same no-RNG-state trick as the IVF centroids), so encoding is a
+    deterministic expression of the vector. Each subvector takes its
+    nearest code via a broadcast join + map-side-combined min(struct)
+    — O(1) plan nodes at any m x k.
   * ADC scoring is pure JVM expressions: the query side carries its
     m x k lookup table as a nested array column; each candidate costs
     m element_at lookups + a sum — F.transform with the index lambda
     + F.aggregate, no Python, no UDF.
 
-The reference repo has no ANN layer at all (its graph queries are
-relational — see SURVEY.md §2); this module, like similarity.py, is
-part of the training-data-pipeline operator set the task brief makes
-first-class. No SQL oracle (k-means training and nested-array ADC are
-not reasonably DuckDB-expressible) — correctness is pytest-pinned:
-encode/decode determinism, ADC-vs-exact recall floors, stored-index
-equality including the append path, and PartitionFilters pruning.
+The stored IVF-PQ index layers the codes under similarity's IVF
+cluster partitioning and probes through the same pruned scan. No SQL
+oracle (nested-array ADC is not reasonably DuckDB-expressible) —
+correctness is pytest-pinned: encode determinism, ADC scores against a
+NumPy recomputation, stored-index equality and PartitionFilters
+pruning.
 """
 
 from __future__ import annotations
@@ -46,10 +40,11 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from kgflow.ops.similarity import (
-    _as_double,
+    N_PROBE,
     _ivf_probes,
-    _norm,
-    _resolve_centroids,
+    _prune,
+    _vectors,
+    _write_index,
     ivf_assignments,
 )
 
@@ -58,22 +53,16 @@ PQ_CODES = 16      # k per subspace — 256 (1 byte) in production
 
 
 def _unit_vectors(embeddings: DataFrame) -> DataFrame:
-    """(vec_id, vec) with vec L2-normalized; zero-norm rows excluded
-    (same guard as similarity.ivf_topk — cosine undefined)."""
-    pre = (
-        embeddings.select("vec_id", _as_double(F.col("embedding")).alias("raw"))
-        .withColumn("nv", _norm(F.col("raw")))
-        .where(F.col("nv") > 0)
-    )
-    return pre.select(
-        "vec_id",
-        F.transform("raw", lambda x: x / F.col("nv")).alias("vec"),
+    """(vec_id, vec) with vec L2-normalized; zero-norm rows excluded."""
+    return _vectors(embeddings).select(
+        "vec_id", F.transform("vec", lambda x: x / F.col("norm")).alias("vec")
     )
 
 
-def _subvectors(unit: DataFrame, dim: int, m: int) -> DataFrame:
-    """(vec_id, sub, svec): each unit vector exploded into its m
-    contiguous subspace slices (dim must divide evenly)."""
+def _subvectors(unit: DataFrame, dim: int) -> DataFrame:
+    """(vec_id, sub, svec): each unit vector exploded into its
+    PQ_SUBSPACES contiguous slices (dim must divide evenly)."""
+    m = PQ_SUBSPACES
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     width = dim // m
@@ -92,9 +81,8 @@ def _subvectors(unit: DataFrame, dim: int, m: int) -> DataFrame:
 
 
 def _seed_codebooks(dim: int, m: int, k: int) -> "list[tuple[int, int, list[float]]]":
-    """Deterministic hash-seeded initial sub-codebooks — the same
-    no-RNG-state trick as similarity._centroid, salted per (sub, code,
-    coord)."""
+    """Deterministic hash-seeded sub-codebooks — the same no-RNG-state
+    trick as similarity._centroid, salted per (sub, code, coord)."""
     import hashlib
 
     width = dim // m
@@ -112,9 +100,9 @@ def _seed_codebooks(dim: int, m: int, k: int) -> "list[tuple[int, int, list[floa
     return rows
 
 
-def _codebook_frame(spark, rows) -> DataFrame:
+def _codebooks(spark, dim: int) -> DataFrame:
     return spark.createDataFrame(
-        [(int(s), int(c), list(v)) for s, c, v in rows],
+        _seed_codebooks(dim, PQ_SUBSPACES, PQ_CODES),
         "sub int, code int, cvec array<double>",
     )
 
@@ -127,91 +115,26 @@ def _l2sq(a, b) -> F.Column:
     )
 
 
-def _assign_codes(subvecs: DataFrame, codebooks: DataFrame) -> DataFrame:
-    """(vec_id, sub, code, svec): nearest sub-centroid per subspace via
-    broadcast join + map-side-combined min(struct) — the join-path
-    argmin, O(1) plan nodes at any m x k. Distances rounded to 9
-    decimals with (dist asc, code asc) tie-break, deterministic given
-    the codebooks."""
+def _sub_dists(subvecs: DataFrame, dim: int) -> DataFrame:
+    """(vec_id, sub, code, dist): squared-L2 from every subvector to
+    every code of its subspace, rounded to 9 decimals, via a broadcast
+    join of the (small) codebook table."""
     d = F.round(_l2sq(F.col("svec"), F.col("cvec")), 9)
-    scored = subvecs.join(F.broadcast(codebooks), "sub").select(
-        "vec_id", "sub", "svec", d.alias("dist"), "code"
-    )
-    best = scored.groupBy("vec_id", "sub").agg(
-        F.min(F.struct(F.col("dist"), F.col("code"), F.col("svec"))).alias("b")
-    )
-    return best.select(
-        "vec_id", "sub", F.col("b.code").alias("code"), F.col("b.svec").alias("svec")
-    )
+    return subvecs.join(
+        F.broadcast(_codebooks(subvecs.sparkSession, dim)), "sub"
+    ).select("vec_id", "sub", "code", d.alias("dist"))
 
 
-def train_pq_codebooks(
-    embeddings: DataFrame,
-    dim: int,
-    m: int = PQ_SUBSPACES,
-    k: int = PQ_CODES,
-    n_iters: int = 5,
-) -> DataFrame:
-    """Lloyd-train the m sub-codebooks (k centroids each) on the
-    normalized corpus — all subspaces in one DataFrame pass per
-    iteration. Returns a (sub, code, cvec) DataFrame for
-    pq_encode/pq_topk. Same determinism contract as
-    similarity.train_centroids: no RNG state, but float means depend
-    on partitioning — PERSIST the trained table next to any index
-    built from it and reload at probe time, never retrain. Per
-    iteration the shuffle is m*k*width aggregation groups regardless
-    of corpus size; train on a sample at 10^9+ vectors. Empty codes
-    keep their previous centroid."""
-    spark = embeddings.sparkSession
-    subvecs = _subvectors(_unit_vectors(embeddings), dim, m)
-    cb = {(s, c): v for s, c, v in _seed_codebooks(dim, m, k)}
-    for _ in range(n_iters):
-        cb_df = _codebook_frame(spark, [(s, c, v) for (s, c), v in cb.items()])
-        assigned = _assign_codes(subvecs, cb_df).select(
-            "sub", "code", F.posexplode("svec").alias("pos", "val")
-        )
-        means = (
-            assigned.groupBy("sub", "code", "pos")
-            .agg(F.avg("val").alias("mval"))
-            .groupBy("sub", "code")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "mval"))).alias("pm"))
-            .select(
-                "sub", "code",
-                F.transform("pm", lambda st: st["mval"]).alias("cvec"),
-            )
-            .collect()
-        )
-        for r in means:
-            cb[(int(r["sub"]), int(r["code"]))] = list(r["cvec"])
-    return _codebook_frame(spark, [(s, c, v) for (s, c), v in sorted(cb.items())])
-
-
-def _resolve_codebooks(
-    spark, dim: int, m: int, k: int, codebooks: "DataFrame | None"
-) -> DataFrame:
-    """Hash-seeded defaults when None (bit-reproducible anywhere),
-    else the trained table as-is."""
-    if codebooks is None:
-        return _codebook_frame(spark, _seed_codebooks(dim, m, k))
-    return codebooks
-
-
-def pq_encode(
-    embeddings: DataFrame,
-    dim: int,
-    m: int = PQ_SUBSPACES,
-    k: int = PQ_CODES,
-    codebooks: "DataFrame | None" = None,
-) -> DataFrame:
+def pq_encode(embeddings: DataFrame, dim: int) -> DataFrame:
     """The PQ code table: (vec_id, codes array<int>, one code per
     subspace in subspace order) — 8-16 B per vector instead of the
-    512 B raw vector. A deterministic expression of the vector given
-    fixed codebooks, so appended corpus shards encode incrementally
-    (same contract as the other at-rest indexes)."""
-    spark = embeddings.sparkSession
-    cb = _resolve_codebooks(spark, dim, m, k, codebooks)
-    subvecs = _subvectors(_unit_vectors(embeddings), dim, m)
-    best = _assign_codes(subvecs, cb)
+    512 B raw vector. Each subvector takes its nearest code with a
+    (dist asc, code asc) tie-break via a map-side-combined
+    min(struct)."""
+    dists = _sub_dists(_subvectors(_unit_vectors(embeddings), dim), dim)
+    best = dists.groupBy("vec_id", "sub").agg(
+        F.min(F.struct("dist", "code"))["code"].alias("code")
+    )
     return best.groupBy("vec_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("sub", "code"))),
@@ -220,31 +143,26 @@ def pq_encode(
     )
 
 
-def _adc_luts(
-    queries: DataFrame, codebooks: DataFrame, dim: int, m: int, k: int
-) -> DataFrame:
+def _adc_luts(queries: DataFrame, dim: int) -> DataFrame:
     """(query_id, lut): per query the m x k table of squared-L2
     distances from its subvectors to every sub-centroid, as a nested
     array (lut[sub][code], 1-based via element_at at probe time).
     Queries are normalized like the corpus; zero-norm queries are
     excluded. The query batch is small by construction, so this stays
     a broadcast-sized table."""
-    q = _unit_vectors(
+    k = PQ_CODES
+    unit = _unit_vectors(
         queries.select(
             F.col("query_id").alias("vec_id"), F.col("query_vec").alias("embedding")
         )
-    ).select(F.col("vec_id").alias("query_id"), "vec")
-    subq = _subvectors(q.select(F.col("query_id").alias("vec_id"), "vec"), dim, m)
-    d = F.round(_l2sq(F.col("svec"), F.col("cvec")), 9)
-    flat = subq.join(F.broadcast(codebooks), "sub").select(
-        F.col("vec_id").alias("query_id"), "sub", "code", d.alias("dist")
     )
+    flat = _sub_dists(_subvectors(unit, dim), dim)
     # nested lut from the (sub, code)-sorted flat list: element s*k+c
-    packed = flat.groupBy("query_id").agg(
+    packed = flat.groupBy(F.col("vec_id").alias("query_id")).agg(
         F.array_sort(F.collect_list(F.struct("sub", "code", "dist"))).alias("fl")
     )
     lut = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
+        F.sequence(F.lit(0), F.lit(PQ_SUBSPACES - 1)),
         lambda s: F.transform(
             F.sequence(F.lit(0), F.lit(k - 1)),
             lambda c: F.element_at(F.col("fl"), (s * k + c + 1).cast("int"))["dist"],
@@ -266,66 +184,20 @@ def _adc_score(codes_col, lut_col) -> F.Column:
     )
 
 
-def pq_topk(
-    codes: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    topk: int = 5,
-    m: int = PQ_SUBSPACES,
-    k: int = PQ_CODES,
-    codebooks: "DataFrame | None" = None,
-) -> DataFrame:
-    """Approximate top-k by ADC over a PQ code table (pq_encode
-    output): candidates never touch the raw vectors — each costs m
-    array lookups against the query's broadcast LUT. Squared-L2 on
-    unit vectors ranks exactly like cosine, so results are comparable
-    to similarity.py's top-k families. Returns (query_id, vec_id,
-    adc, rank), adc ascending (smaller = closer)."""
-    cb = _resolve_codebooks(codes.sparkSession, dim, m, k, codebooks)
-    luts = _adc_luts(queries, cb, dim, m, k)
-    scored = (
-        codes.crossJoin(F.broadcast(luts))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(_adc_score(F.col("codes"), F.col("lut")), 9).alias("adc"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= topk)
-        .select("query_id", "vec_id", "adc", "rank")
-    )
-
-
 # --------------------------------------------------------------------------
 # IVF-PQ at rest: coarse inverted lists (partition pruning) + PQ codes
 # (no vector payload in the index at all)
 # --------------------------------------------------------------------------
 
 def ivfpq_index_table(
-    embeddings: DataFrame,
-    dim: int,
-    m: int = PQ_SUBSPACES,
-    k: int = PQ_CODES,
-    n_centroids: "int | None" = None,
-    centroids: "list[list[float]] | DataFrame | None" = None,
-    codebooks: "DataFrame | None" = None,
-    cluster_cap: "int | None" = None,
+    embeddings: DataFrame, dim: int, cluster_cap: "int | None" = None
 ) -> DataFrame:
     """The IVF-PQ index table (vec_id, cluster, codes): coarse
-    assignment reuses similarity.ivf_assignments (folded or join path
-    by quantizer width), PQ codes join on vec_id — ~8-16 B of payload
-    per vector, raw vectors left behind in the base table."""
-    from kgflow.ops import similarity as sim
-
-    n_cent = n_centroids if n_centroids is not None else sim.N_CENTROIDS
-    coarse = ivf_assignments(
-        embeddings, dim, n_cent, cluster_cap=cluster_cap, centroids=centroids
-    ).select("vec_id", "cluster")
-    codes = pq_encode(embeddings, dim, m, k, codebooks=codebooks)
+    assignment reuses similarity.ivf_assignments, PQ codes join on
+    vec_id — ~8-16 B of payload per vector, raw vectors left behind in
+    the base table."""
+    coarse = ivf_assignments(embeddings, dim, cluster_cap).select("vec_id", "cluster")
+    codes = pq_encode(embeddings, dim)
     return coarse.join(codes, "vec_id").select("vec_id", "cluster", "codes")
 
 
@@ -333,72 +205,32 @@ def write_ivfpq_index(
     embeddings: DataFrame,
     path: str,
     dim: int,
-    m: int = PQ_SUBSPACES,
-    k: int = PQ_CODES,
-    n_centroids: "int | None" = None,
-    centroids: "list[list[float]] | DataFrame | None" = None,
-    codebooks: "DataFrame | None" = None,
     cluster_cap: "int | None" = None,
-    mode: str = "overwrite",
 ) -> None:
     """Materialize the IVF-PQ index partitioned BY cluster — the
-    billion-scale at-rest layout. Same append/persist contracts as the
-    other index writers: assignment and encoding are deterministic
-    expressions given fixed centroids + codebooks, so
-    ``mode="append"`` indexes only new rows; pass the SAME centroids
-    and codebooks at build and probe time (persist trained tables —
-    see train_pq_codebooks)."""
-    # repartition on the partition column first — one file per inverted
-    # list instead of (write tasks x clusters) files; see
-    # similarity.write_lsh_index for the measured rationale
-    ivfpq_index_table(
-        embeddings, dim, m, k,
-        n_centroids=n_centroids, centroids=centroids, codebooks=codebooks,
-        cluster_cap=cluster_cap,
-    ).repartition("cluster").write.partitionBy("cluster").mode(mode).parquet(path)
+    billion-scale at-rest layout."""
+    _write_index(ivfpq_index_table(embeddings, dim, cluster_cap), "cluster", path)
 
 
 def ivfpq_topk_from_index(
-    index: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    topk: int = 5,
-    m: int = PQ_SUBSPACES,
-    k: int = PQ_CODES,
-    n_centroids: "int | None" = None,
-    nprobe: "int | None" = None,
-    centroids: "list[list[float]] | DataFrame | None" = None,
-    codebooks: "DataFrame | None" = None,
+    index: DataFrame, queries: DataFrame, dim: int, topk: int = 5
 ) -> DataFrame:
-    """Probe a stored IVF-PQ index: the nprobe nearest inverted lists
-    become a static IN filter on the cluster partition column (file-
-    listing-time pruning, like ivf_topk_from_index), then ADC scores
-    the surviving codes — the probe reads nprobe/n_centroids of an
-    index that is itself ~64x smaller than the vectors."""
-    from kgflow.ops import similarity as sim
-
-    n_cent = n_centroids if n_centroids is not None else sim.N_CENTROIDS
-    npb = nprobe if nprobe is not None else sim.N_PROBE
-    cent_vals = _resolve_centroids(dim, n_cent, centroids)
-    probes = _ivf_probes(queries, cent_vals, npb).select("query_id", "cluster")
-    probe_keys = [r[0] for r in probes.select("cluster").distinct().collect()]
-    pruned = index.withColumn("cluster", F.col("cluster").cast("int")).where(
-        F.col("cluster").isin(probe_keys)
-    )
-    cb = _resolve_codebooks(index.sparkSession, dim, m, k, codebooks)
-    luts = _adc_luts(queries, cb, dim, m, k)
-    probe_luts = probes.join(luts, "query_id")
+    """Probe a stored IVF-PQ index: the N_PROBE nearest inverted lists
+    prune the scan (similarity's pruned probe), then ADC scores the
+    surviving codes — the probe reads nprobe/n_centroids of an index
+    that is itself ~64x smaller than the vectors. Returns (query_id,
+    vec_id, adc, rank), adc ascending (smaller = closer)."""
+    probes = _ivf_probes(queries, dim, N_PROBE).select("query_id", "cluster")
+    probe_luts = probes.join(_adc_luts(queries, dim), "query_id")
     scored = (
-        pruned.join(F.broadcast(probe_luts), "cluster")
+        _prune(index, probes, "cluster")
+        .join(F.broadcast(probe_luts), "cluster")
         .where(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             "vec_id",
             F.round(_adc_score(F.col("codes"), F.col("lut")), 9).alias("adc"),
         )
-        # a vector may appear under several probed clusters only if the
-        # index was built with duplicate vec_ids; normal builds assign
-        # one cluster per vec_id, so no dedup shuffle is needed
     )
     w = W.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("vec_id"))
     return (

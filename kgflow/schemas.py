@@ -1,15 +1,9 @@
-"""Static schemas for every stage table.
+"""Static schemas: the source-file input and the graph's node labels.
 
 The reference maps YAML type names to Spark types at runtime
 (databricks/notebooks/csv-ingestion.py:95-113); our input shape is fixed
-by BASELINE.json's input_hint, so schemas are compile-time constants.
-
-Graph output shape follows the Neo4j bulk-loader convention the
-reference's graph tables feed (node `(node_id, properties, label)` at
-databricks/notebooks/graph-transformation.py:77-93, relationship
-`(from_id, to_id, properties, rel_type)` at :103-116, renamed for the
-loader at databricks/notebooks/neo4j-loading.py:122-137) — we emit
-`:ID/:LABEL` and `:START_ID/:END_ID/:TYPE` columns directly.
+by BASELINE.json's input_hint, so the schema is a compile-time constant.
+Every later stage table's schema is whatever its stage function builds.
 """
 
 from __future__ import annotations
@@ -27,49 +21,6 @@ SOURCE_FILES = T.StructType(
     ]
 )
 
-# ---- stage 1: ingested (raw + lineage columns) ------------------------------
-INGESTED = T.StructType(
-    list(SOURCE_FILES.fields)
-    + [
-        T.StructField("content_sha", T.StringType(), True),  # sha2(content,256)
-        T.StructField("file_id", T.StringType(), True),  # sha2(repo|path|commit)
-        T.StructField("ingest_partition", T.IntegerType(), True),
-    ]
-)
-
-# ---- stage 2: candidate triples ---------------------------------------------
-TRIPLES = T.StructType(
-    [
-        T.StructField("subj", T.StringType(), True),
-        T.StructField("pred", T.StringType(), True),
-        T.StructField("obj", T.StringType(), True),
-        T.StructField("src_sha", T.StringType(), True),  # content sha of source row
-        T.StructField("repo", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
-
-PREDICATES = ("WRITTEN_IN", "DECLARES", "IMPORTS", "CALLS")
-
-# ---- stage 4/5 outputs -------------------------------------------------------
-NODES = T.StructType(
-    [
-        T.StructField(":ID", T.StringType(), False),
-        T.StructField(":LABEL", T.StringType(), False),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("properties", T.StringType(), True),  # JSON bag, fixed key order
-    ]
-)
-
-EDGES = T.StructType(
-    [
-        T.StructField(":START_ID", T.StringType(), False),
-        T.StructField(":END_ID", T.StringType(), False),
-        T.StructField(":TYPE", T.StringType(), False),
-        T.StructField("properties", T.StringType(), True),
-    ]
-)
-
 # Node label per triple role (subject label / object label per predicate).
 PRED_ENDPOINT_LABELS: dict[str, tuple[str, str]] = {
     "WRITTEN_IN": ("File", "Language"),
@@ -77,12 +28,3 @@ PRED_ENDPOINT_LABELS: dict[str, tuple[str, str]] = {
     "IMPORTS": ("File", "Module"),
     "CALLS": ("File", "Symbol"),
 }
-
-LINEAGE = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("row_count", T.LongType(), False),
-        T.StructField("run_ts", T.StringType(), True),
-    ]
-)

@@ -308,59 +308,6 @@ def test_ivf_topk_recall_and_cluster_cap(spark):
     assert similarity.ivf_topk(vectors, queries, dim=16, k=5, cluster_cap=10).count() > 0
 
 
-def test_trained_centroids_beat_hash_seeded_recall(spark):
-    """Round-4 verdict item 4: spherical-k-means-trained coarse
-    centroids must beat the data-blind hash-seeded ones at equal nprobe
-    on the clustered 100k corpus (same corpus construction as
-    test_multiprobe_lsh_recall_at_100k). nprobe=1 exposes pure
-    quantizer quality — with one probe, recall IS how well the centroid
-    partition respects the data's cluster structure."""
-    import numpy as np
-    import pandas as pd
-
-    rng = np.random.default_rng(42)
-    n, dim, nc = 100_000, 16, 2000
-    centers = rng.normal(size=(nc, dim))
-    idx = rng.integers(0, nc, size=n)
-    vecs = centers[idx] + 0.05 * rng.normal(size=(n, dim))
-    pdf = pd.DataFrame(
-        {
-            "vec_id": np.arange(n),
-            "embedding": [v.astype("float32").tolist() for v in vecs],
-            "label": idx.astype("int32"),
-        }
-    )
-    vectors = spark.createDataFrame(
-        pdf, "vec_id long, embedding array<float>, label int"
-    )
-    queries = vectors.where(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    exact = {
-        (r.query_id, r.vec_id)
-        for r in similarity.brute_force_topk(vectors, queries, k=5).collect()
-    }
-    trained = similarity.train_centroids(vectors, dim=dim, n_centroids=16, n_iters=4)
-    assert trained.count() == 16
-    got_trained = {
-        (r.query_id, r.vec_id)
-        for r in similarity.ivf_topk(
-            vectors, queries, dim=dim, k=5, nprobe=1, centroids=trained
-        ).collect()
-    }
-    got_seeded = {
-        (r.query_id, r.vec_id)
-        for r in similarity.ivf_topk(
-            vectors, queries, dim=dim, k=5, nprobe=1
-        ).collect()
-    }
-    recall_trained = len(exact & got_trained) / len(exact)
-    recall_seeded = len(exact & got_seeded) / len(exact)
-    assert recall_trained > recall_seeded, (
-        f"trained {recall_trained:.3f} must beat hash-seeded {recall_seeded:.3f}"
-    )
-
-
 def test_lsh_recall_and_bucket_cap_at_1m(spark):
     """Corpus-scale ANN (round-3 verdict item 5): at 1M vectors with
     planes_for-scaled signature width and a per-bucket cap,
@@ -559,21 +506,16 @@ def test_lsh_index_roundtrip_prunes_partitions(spark, tmp_path):
     assert "bucket" in _partition_filter_of(_plan(got))
 
 
-def test_ivf_index_roundtrip_append_and_pruning(spark, tmp_path):
-    """IVF at-rest index: build on part of the corpus, APPEND the rest
-    (the incremental path — assignment is a deterministic expression of
-    the embedding, so only new rows are indexed), then probe the stored
-    table. Results must equal the in-memory ivf_topk over the full
-    corpus, and the probe must prune to the nprobe cluster partitions."""
+def test_ivf_index_roundtrip_prunes_partitions(spark, tmp_path):
+    """write_ivf_index -> ivf_topk_from_index must return exactly the
+    in-memory ivf_topk's results, and the probe must prune the stored
+    scan to the nprobe cluster partitions."""
     vectors = _pseudo_vectors(spark)
     queries = vectors.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     path = str(tmp_path / "ivf_index")
-    similarity.write_ivf_index(vectors.where(F.col("vec_id") < 100), path, dim=16)
-    similarity.write_ivf_index(
-        vectors.where(F.col("vec_id") >= 100), path, dim=16, mode="append"
-    )
+    similarity.write_ivf_index(vectors, path, dim=16)
     index = spark.read.parquet(path)
     got = similarity.ivf_topk_from_index(index, queries, dim=16, k=5)
     want = similarity.ivf_topk(vectors, queries, dim=16, k=5)
@@ -581,114 +523,114 @@ def test_ivf_index_roundtrip_append_and_pruning(spark, tmp_path):
     assert "cluster" in _partition_filter_of(_plan(got))
 
 
-def test_ivf_index_with_trained_centroids(spark, tmp_path):
-    """The stored-index path accepts the trained coarse quantizer too:
-    build and probe with the SAME trained centroid table (the contract
-    write_ivf_index documents) and match the in-memory trained path."""
-    vectors = _pseudo_vectors(spark)
-    queries = vectors.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+def test_zero_norm_vectors_are_excluded_not_fatal(spark, tmp_path):
+    """An all-zero vector has no cosine. Every ANN family must drop it
+    from the index and the query set, as the oracle twins' zero-norm
+    filter does, instead of raising DIVIDE_BY_ZERO under ANSI division.
+    The zero vector sits in cluster 0's label block and is also a
+    query; its planted clone is zero too."""
+    from kgflow.ops import pq
+
+    base = _pseudo_vectors(spark)
+    zero_id = 10_000
+    vectors = base.unionByName(
+        spark.createDataFrame([(zero_id, [0.0] * 16, 0)], base.schema)
     )
-    trained = similarity.train_centroids(vectors, dim=16, n_iters=2)
-    path = str(tmp_path / "ivf_trained")
-    similarity.write_ivf_index(vectors, path, dim=16, centroids=trained)
-    index = spark.read.parquet(path)
-    got = similarity.ivf_topk_from_index(
-        index, queries, dim=16, k=5, centroids=trained
-    )
-    want = similarity.ivf_topk(vectors, queries, dim=16, k=5, centroids=trained)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
-def test_ivf_join_assignment_matches_folded(spark):
-    """The broadcast-join quantizer (the 4k-65k-inverted-list scale
-    path, round-5 verdict item 3) must assign every vector to exactly
-    the cluster the folded-literal path picks — same rounded cosine,
-    same (sim desc, cluster asc) tie-break — at the default width and
-    above the auto-switch threshold."""
-    vectors = _pseudo_vectors(spark)
-    for n in (16, 128):
-        fold = {
-            (r.vec_id, r.cluster)
-            for r in similarity.ivf_assignments(
-                vectors, dim=16, n_centroids=n, assign="fold"
-            ).collect()
-        }
-        join = {
-            (r.vec_id, r.cluster)
-            for r in similarity.ivf_assignments(
-                vectors, dim=16, n_centroids=n, assign="join"
-            ).collect()
-        }
-        assert fold == join, f"join/fold assignment divergence at n={n}"
-
-
-def test_ivf_wide_quantizer_auto_join_sane_plan(spark, tmp_path):
-    """At >= 1024 centroids the auto path must use the broadcast-join
-    quantizer: the plan stays O(1) in n_centroids (no 1024-branch
-    folded array expression) and carries the broadcast join, and the
-    path is wired through write_ivf_index -> stored index."""
-    vectors = _pseudo_vectors(spark)
-    asg = similarity.ivf_assignments(vectors, dim=16, n_centroids=1024)
-    plan = _plan(asg)
-    # a folded 1024-centroid quantizer embeds 1024 x 16 literals
-    # (hundreds of KB of plan text); the join plan is constant-size
-    assert len(plan) < 50_000, f"plan blew up: {len(plan)} chars"
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
-    rows = asg.collect()
-    assert len(rows) == vectors.count()
-    assert all(0 <= r.cluster < 1024 for r in rows)
-
-    path = str(tmp_path / "wide_ivf")
-    similarity.write_ivf_index(vectors, path, dim=16, n_centroids=1024)
-    stored = {
-        (r.vec_id, r.cluster)
-        for r in spark.read.parquet(path).select("vec_id", "cluster").collect()
+    planted = similarity.plant_near_duplicate_vectors(vectors)
+    zero_ids = {zero_id, zero_id + 1_000_000}
+    queries = vectors.where(
+        (F.col("vec_id") < 5) | (F.col("vec_id") == zero_id)
+    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
+    dim = 16
+    outputs = {
+        "brute": similarity.brute_force_topk(vectors, queries, k=5),
+        "lsh": similarity.lsh_topk(
+            vectors, queries, dim, k=5, bucket_cap=similarity.DEFAULT_BUCKET_CAP
+        ),
+        "ivf": similarity.ivf_topk(
+            vectors, queries, dim, k=5, cluster_cap=similarity.DEFAULT_CLUSTER_CAP
+        ),
+        "near_dup": similarity.embedding_near_duplicates(planted, 0.95),
+        "near_dup_lsh": similarity.embedding_near_duplicates_lsh(
+            planted, dim, threshold=0.95, bucket_cap=similarity.DEFAULT_BUCKET_CAP
+        ),
     }
-    assert stored == {(r.vec_id, r.cluster) for r in rows}
-    # end-to-end probe at wide quantizer width: the query side ranks
-    # probes via the join+window path (same threshold switch)
-    queries = vectors.where(F.col("vec_id") < 4).select(
+    lsh_path, ivf_path, ivfpq_path = (
+        str(tmp_path / n) for n in ("lsh", "ivf", "ivfpq")
+    )
+    similarity.write_lsh_index(
+        vectors, lsh_path, dim, bucket_cap=similarity.DEFAULT_BUCKET_CAP
+    )
+    similarity.write_ivf_index(
+        vectors, ivf_path, dim, cluster_cap=similarity.DEFAULT_CLUSTER_CAP
+    )
+    pq.write_ivfpq_index(
+        vectors, ivfpq_path, dim, cluster_cap=similarity.DEFAULT_CLUSTER_CAP
+    )
+    for name, path in (("lsh", lsh_path), ("ivf", ivf_path), ("ivfpq", ivfpq_path)):
+        outputs[f"{name}_index"] = spark.read.parquet(path)
+    outputs["lsh_at_rest"] = similarity.lsh_topk_from_index(
+        outputs["lsh_index"], queries, dim, k=5
+    )
+    outputs["ivf_at_rest"] = similarity.ivf_topk_from_index(
+        outputs["ivf_index"], queries, dim, k=5
+    )
+    outputs["ivfpq_at_rest"] = pq.ivfpq_topk_from_index(
+        outputs["ivfpq_index"], queries, dim, topk=5
+    )
+    for name, df in outputs.items():
+        ids = [c for c in ("query_id", "vec_id", "vec_a", "vec_b") if c in df.columns]
+        rows = df.select(*ids).collect()
+        assert rows, f"{name} returned nothing"
+        seen = {v for r in rows for v in r}
+        assert not seen & zero_ids, f"{name} kept a zero-norm vector"
+
+
+def test_stored_probes_match_registry_rows(spark, tmp_path):
+    """The at-rest index rows of bench.py, called exactly as it calls
+    them (default quantizers, default caps, vec_id < 5 queries): the
+    stored LSH and IVF probes return the oracle-checked ann_lsh_topk and
+    ann_ivf_topk rows, and the stored IVF-PQ probe equals the probe over
+    the in-memory index table."""
+    from kgflow.analytics.registry import QUERIES
+    from kgflow.analytics.tables import load
+    from kgflow.ops import pq
+    from test_oracle_parity import SF_DIR as sf
+
+    emb = load(spark, sf, "embeddings")
+    dim = int(emb.select(F.size("embedding")).first()[0])
+    queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    topk = similarity.ivf_topk(vectors, queries, dim=16, k=5, n_centroids=1024)
-    assert topk.count() > 0
+    lsh_path, ivf_path, ivfpq_path = (
+        str(tmp_path / n) for n in ("lsh", "ivf", "ivfpq")
+    )
+    similarity.write_lsh_index(
+        emb, lsh_path, dim, bucket_cap=similarity.DEFAULT_BUCKET_CAP
+    )
+    similarity.write_ivf_index(
+        emb, ivf_path, dim, cluster_cap=similarity.DEFAULT_CLUSTER_CAP
+    )
+    pq.write_ivfpq_index(
+        emb, ivfpq_path, dim, cluster_cap=similarity.DEFAULT_CLUSTER_CAP
+    )
 
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
 
-def test_lsh_near_dup_from_index_matches_in_memory_with_append(spark, tmp_path):
-    """Near-dup detection over the STORED LSH index (round-5 verdict
-    item 6): build the index on the base corpus, APPEND only the
-    planted clones (incremental shard path — old rows never
-    re-bucketed), and the stored-index pair set must equal the
-    in-memory path over the full planted corpus."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    planted = similarity.plant_near_duplicate_vectors(emb)
-    clones = planted.where(F.col("vec_id") >= 1_000_000)
-    path = str(tmp_path / "lsh_nd_index")
-    similarity.write_lsh_index(emb, path, dim=64)
-    similarity.write_lsh_index(clones, path, dim=64, mode="append")
-    index = spark.read.parquet(path)
-    got = similarity.embedding_near_duplicates_lsh_from_index(index, threshold=0.95)
-    want = similarity.embedding_near_duplicates_lsh(planted, dim=64, threshold=0.95)
-    got_rows = sorted(map(tuple, got.collect()))
-    want_rows = sorted(map(tuple, want.collect()))
-    assert got_rows == want_rows
-    assert len(got_rows) > 0  # planted clones guarantee cos=1.0 pairs
-
-
-def test_train_centroids_wide_quantizer_join_path(spark):
-    """Training a wide quantizer must route each Lloyd iteration's
-    assignment through the broadcast-join path (no O(n_centroids)
-    folded plan per iteration) and still return one centroid row per
-    cluster with the input dimensionality."""
-    vectors = _pseudo_vectors(spark)
-    trained = similarity.train_centroids(vectors, dim=16, n_centroids=96, n_iters=2)
-    rows = trained.collect()
-    assert len(rows) == 96
-    assert all(len(r.centroid) == 16 for r in rows)
-    # trained table plugs into the stored-index path at wide widths too
-    asg = similarity.ivf_assignments(vectors, dim=16, centroids=trained)
-    assert asg.count() == vectors.count()
+    lsh = rows(
+        similarity.lsh_topk_from_index(spark.read.parquet(lsh_path), queries, dim, k=5)
+    )
+    ivf = rows(
+        similarity.ivf_topk_from_index(spark.read.parquet(ivf_path), queries, dim, k=5)
+    )
+    ivfpq = rows(
+        pq.ivfpq_topk_from_index(spark.read.parquet(ivfpq_path), queries, dim, topk=5)
+    )
+    assert lsh and lsh == rows(QUERIES["ann_lsh_topk"](spark, sf))
+    assert ivf and ivf == rows(QUERIES["ann_ivf_topk"](spark, sf))
+    mem = pq.ivfpq_index_table(emb, dim, cluster_cap=similarity.DEFAULT_CLUSTER_CAP)
+    assert ivfpq and ivfpq == rows(pq.ivfpq_topk_from_index(mem, queries, dim, topk=5))
 
 
 def test_double_sql_round_trips_non_finite_values(spark):
