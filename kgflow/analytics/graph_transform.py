@@ -10,8 +10,9 @@ neo4j-loading.py:122-137), MERGE-idempotent dedup
 column-presence probing (graph-transformation.py:70-75
 struct_if_exists) — re-done at plan-build time over df.columns.
 
-Property bags are to_json(struct(...)) with key order fixed by the
-prop_cols argument, so outputs are byte-deterministic.
+Node property bags are to_json(struct(...)) with key order fixed by the
+prop_cols argument, so outputs are byte-deterministic; edges carry an
+empty bag.
 """
 
 from __future__ import annotations
@@ -50,39 +51,26 @@ def to_edges(
     to_col: str,
     to_label: str,
     rel_type: str,
-    prop_cols: list[str] | None = None,
 ) -> DataFrame:
     """Relational rows -> loader-shaped edge table, deduplicated by
     (start, end, type)."""
-    if not prop_cols:
-        # prop-less fast path (round 7, guide §2.3): dedup the RAW key
-        # pair and format afterwards — the "Label:" prefixes and the
-        # rel_type literal are constant per call and the cast-to-string
-        # concat is injective given them, so distinct(raw) == distinct
-        # (formatted) while the exchange carries half the bytes (the
-        # same narrow-row trick to_edges_multi already plays)
-        return (
-            df.select(
-                F.col(from_col).cast("string").alias("_a"),
-                F.col(to_col).cast("string").alias("_b"),
-            )
-            .dropDuplicates(["_a", "_b"])
-            .select(
-                F.concat(F.lit(from_label + ":"), F.col("_a")).alias(":START_ID"),
-                F.concat(F.lit(to_label + ":"), F.col("_b")).alias(":END_ID"),
-                F.lit(rel_type).alias(":TYPE"),
-                F.lit("{}").alias("properties"),
-            )
-        )
-    props = F.to_json(struct_if_exists(df, prop_cols))
+    # dedup the RAW key pair and format afterwards (round 7, guide
+    # §2.3): the "Label:" prefixes and the rel_type literal are constant
+    # per call and the cast-to-string concat is injective given them, so
+    # distinct(raw) == distinct(formatted) while the exchange carries half
+    # the bytes (the same narrow-row trick to_edges_multi already plays)
     return (
         df.select(
-            F.concat(F.lit(from_label + ":"), F.col(from_col).cast("string")).alias(":START_ID"),
-            F.concat(F.lit(to_label + ":"), F.col(to_col).cast("string")).alias(":END_ID"),
-            F.lit(rel_type).alias(":TYPE"),
-            props.alias("properties"),
+            F.col(from_col).cast("string").alias("_a"),
+            F.col(to_col).cast("string").alias("_b"),
         )
-        .dropDuplicates([":START_ID", ":END_ID", ":TYPE"])
+        .dropDuplicates(["_a", "_b"])
+        .select(
+            F.concat(F.lit(from_label + ":"), F.col("_a")).alias(":START_ID"),
+            F.concat(F.lit(to_label + ":"), F.col("_b")).alias(":END_ID"),
+            F.lit(rel_type).alias(":TYPE"),
+            F.lit("{}").alias("properties"),
+        )
     )
 
 

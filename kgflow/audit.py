@@ -10,11 +10,16 @@ cost wall-clock but can no longer fake a regression.
 
 /proc/stat is Linux-only; on other hosts the audit degrades to zeros
 (never blocks a measurement).
+
+`measure` is the pipeline's one per-step probe: wall, own-tree CPU,
+driver-JVM GC and JIT ms over a `with` block, as a `Usage` record.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass
+from typing import Iterator
 
 # /proc/stat cpu line: user nice system idle iowait irq softirq steal ...
 _IDX_IDLE = 3
@@ -139,6 +144,37 @@ def jvm_compile_ms(spark) -> "int | None":
         return int(bean.getTotalCompilationTime())
     except Exception:
         return None
+
+
+@dataclass
+class Usage:
+    """What one pipeline step cost: wall seconds, own-tree CPU-seconds,
+    driver-JVM GC ms and JIT compile ms. A probe the host or JVM lacks
+    reads None."""
+
+    sec: "float | None" = None
+    own_cpu_s: "float | None" = None
+    gc_ms: "int | None" = None
+    jit_ms: "int | None" = None
+
+
+@contextmanager
+def measure(spark) -> "Iterator[Usage]":
+    """``with measure(spark) as usage:`` — the yielded Usage is filled
+    when the block ends (not when it raises)."""
+    import time
+
+    usage = Usage()
+    probes = (_own_cpu_seconds, lambda: jvm_gc_ms(spark), lambda: jvm_compile_ms(spark))
+    before = [p() for p in probes]
+    t0 = time.monotonic()
+    yield usage
+    usage.sec = round(time.monotonic() - t0, 3)
+    cpu, usage.gc_ms, usage.jit_ms = (
+        None if a is None or b is None else b - a
+        for a, b in zip(before, [p() for p in probes])
+    )
+    usage.own_cpu_s = None if cpu is None else round(cpu, 2)
 
 
 @dataclass

@@ -271,9 +271,9 @@ def _row(repo: str, path: str, commit: str, lang: str, content: str | None,
 # Spark-facing builders (distributed, deterministic)
 # --------------------------------------------------------------------------
 
-def source_files(spark: SparkSession, n_files: int, partitions: int | None = None) -> DataFrame:
+def source_files(spark: SparkSession, n_files: int) -> DataFrame:
     """The synthetic input table (repo, path, commit, lang, content)."""
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 4)
+    parts = max(spark.sparkContext.defaultParallelism, 4)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -286,9 +286,9 @@ def source_files(spark: SparkSession, n_files: int, partitions: int | None = Non
     return spark.range(0, n_files, 1, parts).mapInPandas(gen, schema=schemas.SOURCE_FILES)
 
 
-def golden_triples(spark: SparkSession, n_files: int, partitions: int | None = None) -> DataFrame:
+def golden_triples(spark: SparkSession, n_files: int) -> DataFrame:
     """Expected distinct (subj, pred, obj) set for the same corpus."""
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 4)
+    parts = max(spark.sparkContext.defaultParallelism, 4)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -28,6 +28,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from kgflow.audit import Usage
+
 
 def fingerprint(params: dict, upstream: str | None = None) -> str:
     payload = json.dumps({"params": params, "upstream": upstream}, sort_keys=True)
@@ -41,13 +43,9 @@ class StageResult:
     fingerprint: str
     row_count: int
     skipped: bool
-    elapsed_sec: float = 0.0
-    # per-stage telemetry, filled by the orchestrator (pipeline.stage):
-    # CPU-seconds burned by this process tree and driver-JVM GC ms over
-    # the stage's wall window — the record that attributes an own-CPU
-    # spread across identical runs to a stage (round-5 verdict item 2)
-    own_cpu_s: "float | None" = None
-    gc_ms: "int | None" = None
+    # what building and writing the stage cost, filled by the
+    # orchestrator (pipeline.run_pipeline); None when the stage resumed
+    usage: "Usage | None" = None
 
 
 def _manifest_path(stage_dir: str) -> str:
@@ -168,7 +166,7 @@ def write_stage(df: DataFrame, stage: str, run_dir: str, fp: str, run_ts: str) -
     with open(tmp, "w") as f:
         json.dump(manifest, f, indent=2)
     os.replace(tmp, _manifest_path(stage_dir))  # atomic completion marker
-    return StageResult(stage, data_path, fp, int(row_count), skipped=False, elapsed_sec=elapsed)
+    return StageResult(stage, data_path, fp, int(row_count), skipped=False)
 
 
 def read_stage(spark: SparkSession, run_dir: str, stage: str) -> DataFrame:

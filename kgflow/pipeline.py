@@ -11,11 +11,20 @@ matches the input fingerprint is skipped and its table read back.
 data) — the reference's current_timestamp() ingest columns
 (csv-ingestion.py:176) make its reruns non-reproducible; ours are
 byte-identical for identical input.
+
+The run explains itself through one record per step: every stage that
+runs (its build plus its write), the end-of-run validation and the whole
+run each get an `audit.Usage` (wall, own-tree CPU, driver-JVM GC and JIT
+ms) from the same `audit.measure` window. A resumed stage has none: it
+did no work. `run_pipeline.py` prints its JSON summary from these
+records.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import cache
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -37,13 +46,9 @@ STAGES = ("ingested", "triples", "alias_edges", "canonical_map", "nodes", "edges
 @dataclass
 class PipelineReport:
     results: dict[str, lin.StageResult] = field(default_factory=dict)
-    # wall seconds of the work that happens BETWEEN stage writes —
-    # materialize's eager build of the shared canonicalized stream and
-    # the end-of-run constraint validation. Round-7 telemetry: the gap
-    # between sum(stage secs) and elapsed was ~10 s/run at 200k files
-    # and unattributable from the summary alone (guide §1: measure the
-    # thing you want to optimize).
-    sections: dict[str, float] = field(default_factory=dict)
+    # what the end-of-run constraint validation and the whole run cost
+    validate: audit.Usage | None = None
+    run: audit.Usage = field(default_factory=audit.Usage)
 
     @property
     def triples_emitted(self) -> int:
@@ -70,90 +75,54 @@ def run_pipeline(
     """
     report = PipelineReport()
 
-    def stage(name: str, fp: str, build) -> lin.StageResult:
+    def stage(name: str, fp: str, build) -> None:
         res = lin.completed(run_dir, name, fp)
         if res is None:
-            # per-stage CPU + GC telemetry: own-tree CPU-seconds and
-            # driver-JVM GC ms around exactly this stage's window, so a
-            # run-to-run own-CPU spread on identical input is
-            # attributable to a stage (and to GC vs useful work) from
-            # the run summary alone (round-5 verdict item 2)
-            cpu0 = audit._own_cpu_seconds()
-            gc0 = audit.jvm_gc_ms(spark)
-            # build() may run EAGER work (link/canonicalize materialize
-            # intermediates with localCheckpoint) that write_stage's own
-            # timer never sees — record its wall separately so the
-            # summary accounts for the full stage window (round-7: the
-            # 500k-file run had ~38 s of elapsed_sec no stage row
-            # claimed, almost all of it these builds)
-            import time as _time
-
-            _tb = _time.monotonic()
-            df = build()
-            build_wall = _time.monotonic() - _tb
-            if build_wall >= 0.05:
-                report.sections[f"build_{name}"] = round(build_wall, 3)
-            res = lin.write_stage(df, name, run_dir, fp, run_ts)
-            cpu1 = audit._own_cpu_seconds()
-            gc1 = audit.jvm_gc_ms(spark)
-            if cpu0 is not None and cpu1 is not None:
-                res.own_cpu_s = round(cpu1 - cpu0, 2)
-            if gc0 is not None and gc1 is not None:
-                res.gc_ms = int(gc1 - gc0)
+            # build() may run eager work (link, canonicalize and
+            # materialize localCheckpoint intermediates), so the window
+            # spans the build and the write
+            with audit.measure(spark) as usage:
+                res = lin.write_stage(build(), name, run_dir, fp, run_ts)
+            res.usage = usage
         report.results[name] = res
-        return res
 
-    fp0 = lin.fingerprint({"corpus": corpus_fingerprint})
-    # the persisted ingest table is the metadata-only lineage anchor
-    # (no content rewrite); triples hash the content again inline in
-    # their own scan (F.sha2, whole-stage codegen), the same
-    # extract(ingest(...)) the streaming path runs
-    stage("ingested", fp0, lambda: ingest_manifest(source))
+    with audit.measure(spark) as report.run:
+        fp0 = lin.fingerprint({"corpus": corpus_fingerprint})
+        # the persisted ingest table is the metadata-only lineage anchor
+        # (no content rewrite); triples hash the content again inline in
+        # their own scan (F.sha2, whole-stage codegen), the same
+        # extract(ingest(...)) the streaming path runs
+        stage("ingested", fp0, lambda: ingest_manifest(source))
 
-    fp1 = lin.fingerprint({}, fp0)
-    stage("triples", fp1, lambda: extract(ingest(source)))
-    triples = lin.read_stage(spark, run_dir, "triples")
+        fp1 = lin.fingerprint({}, fp0)
+        stage("triples", fp1, lambda: extract(ingest(source)))
+        triples = lin.read_stage(spark, run_dir, "triples")
 
-    fp2 = lin.fingerprint({}, fp1)
-    stage("alias_edges", fp2, lambda: link(triples)[1])
-    alias_edges = lin.read_stage(spark, run_dir, "alias_edges")
+        fp2 = lin.fingerprint({}, fp1)
+        stage("alias_edges", fp2, lambda: link(triples)[1])
+        alias_edges = lin.read_stage(spark, run_dir, "alias_edges")
 
-    fp3 = lin.fingerprint({}, fp2)
-    stage("canonical_map", fp3, lambda: canonical_map(alias_edges))
-    cmap = lin.read_stage(spark, run_dir, "canonical_map")
+        fp3 = lin.fingerprint({}, fp2)
+        stage("canonical_map", fp3, lambda: canonical_map(alias_edges))
+        cmap = lin.read_stage(spark, run_dir, "canonical_map")
 
-    fp4 = lin.fingerprint({"out_partitions": out_partitions}, fp3)
-    # materialize() eagerly checkpoints the canonicalized stream, so
-    # only build it if at least one output stage actually needs to run
-    if not (
-        lin.is_complete(f"{run_dir}/nodes", fp4)
-        and lin.is_complete(f"{run_dir}/edges", fp4)
-    ):
-        import time as _time
+        fp4 = lin.fingerprint({"out_partitions": out_partitions}, fp3)
+        # materialize() eagerly checkpoints the canonicalized stream both
+        # outputs share: the first output step that runs builds the pair
+        pair = cache(lambda: materialize(triples, cmap, out_partitions=out_partitions))
+        stage("nodes", fp4, lambda: pair()[0])
+        stage("edges", fp4, lambda: pair()[1])
 
-        _t0 = _time.monotonic()
-        nodes_df, edges_df = materialize(triples, cmap, out_partitions=out_partitions)
-        report.sections["materialize_build"] = round(_time.monotonic() - _t0, 3)
-    else:
-        nodes_df = edges_df = None
-    stage("nodes", fp4, lambda: nodes_df)
-    stage("edges", fp4, lambda: edges_df)
-
-    if validate:
-        nodes = lin.read_stage(spark, run_dir, "nodes")
-        edges = lin.read_stage(spark, run_dir, "edges")
-        # the two constraint probes are independent actions; running
-        # them from a 2-thread pool lets the second job back-fill the
-        # first's straggler tail (guide §2.6) — measured 4.6 -> 3.2 s
-        # in a fresh JVM at 200k files
-        from concurrent.futures import ThreadPoolExecutor
-        import time as _time
-
-        _t0 = _time.monotonic()
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fu = pool.submit(assert_unique_ids, nodes)
-            fe = pool.submit(assert_edge_endpoints, nodes, edges)
-            fu.result()
-            fe.result()
-        report.sections["validate"] = round(_time.monotonic() - _t0, 3)
+        if validate:
+            # the two constraint probes are independent actions; running
+            # them from a 2-thread pool lets the second job back-fill the
+            # first's straggler tail (guide §2.6) — measured 4.6 -> 3.2 s
+            # in a fresh JVM at 200k files
+            with audit.measure(spark) as report.validate, ThreadPoolExecutor(2) as pool:
+                nodes = lin.read_stage(spark, run_dir, "nodes")
+                edges = lin.read_stage(spark, run_dir, "edges")
+                fu = pool.submit(assert_unique_ids, nodes)
+                fe = pool.submit(assert_edge_endpoints, nodes, edges)
+                fu.result()
+                fe.result()
     return report

@@ -24,7 +24,7 @@ without needing an artificial salt column.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kgflow.schemas import PRED_ENDPOINT_LABELS
@@ -51,15 +51,21 @@ def canonicalized_triples(triples: DataFrame, cmap: DataFrame) -> DataFrame:
     return mapped
 
 
+def _endpoint_labels() -> tuple[Column, Column]:
+    """(subject label, object label) of each row's predicate, looked up
+    in PRED_ENDPOINT_LABELS. A function, not a constant: F.create_map
+    needs a live SparkContext."""
+    return tuple(
+        F.create_map(
+            *[F.lit(x) for p, ends in PRED_ENDPOINT_LABELS.items() for x in (p, ends[i])]
+        )[F.col("pred")]
+        for i in (0, 1)
+    )
+
+
 def build_nodes(triples_c: DataFrame) -> DataFrame:
     """Distinct endpoint nodes across all predicates, loader shape."""
-    label_map = PRED_ENDPOINT_LABELS
-    subj_label = F.create_map(
-        *[x for p, (s, _) in label_map.items() for x in (F.lit(p), F.lit(s))]
-    )[F.col("pred")]
-    obj_label = F.create_map(
-        *[x for p, (_, o) in label_map.items() for x in (F.lit(p), F.lit(o))]
-    )[F.col("pred")]
+    subj_label, obj_label = _endpoint_labels()
 
     subj_nodes = triples_c.select(
         subj_label.alias(":LABEL"), F.col("subj").alias("name")
@@ -79,13 +85,7 @@ def build_nodes(triples_c: DataFrame) -> DataFrame:
 
 def build_edges(triples_c: DataFrame) -> DataFrame:
     """Deduplicated typed edges; evidence count kept as a property."""
-    label_map = PRED_ENDPOINT_LABELS
-    subj_label = F.create_map(
-        *[x for p, (s, _) in label_map.items() for x in (F.lit(p), F.lit(s))]
-    )[F.col("pred")]
-    obj_label = F.create_map(
-        *[x for p, (_, o) in label_map.items() for x in (F.lit(p), F.lit(o))]
-    )[F.col("pred")]
+    subj_label, obj_label = _endpoint_labels()
     # group on the RAW (pred, subj, obj) key and format the loader
     # columns AFTER the aggregate (round 7, guide §2.3): :TYPE IS pred
     # and the label prefixes are functions of pred, so the grouping is

@@ -18,7 +18,7 @@ import argparse
 import json
 import os
 import sys
-import time
+from dataclasses import asdict
 
 
 def _input_fingerprint(spark, path: str) -> str:
@@ -81,6 +81,7 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     from kgflow import fixtures
+    from kgflow.audit import Usage
     from kgflow.pipeline import run_pipeline
     from kgflow.session import get_spark
 
@@ -104,12 +105,6 @@ def main(argv: list[str] | None = None) -> int:
         source = spark.read.parquet(args.input)
         corpus_fp = _input_fingerprint(spark, args.input)
 
-    from kgflow import audit
-
-    cpu0 = audit._own_cpu_seconds()
-    gc0 = audit.jvm_gc_ms(spark)
-    jit0 = audit.jvm_compile_ms(spark)
-    t0 = time.monotonic()
     report = run_pipeline(
         spark,
         source,
@@ -118,37 +113,27 @@ def main(argv: list[str] | None = None) -> int:
         run_ts=args.run_ts,
         out_partitions=args.out_partitions,
     )
-    elapsed = time.monotonic() - t0
-    cpu1 = audit._own_cpu_seconds()
-    gc1 = audit.jvm_gc_ms(spark)
-    jit1 = audit.jvm_compile_ms(spark)
 
+    # every figure comes from the report's records (kgflow/pipeline.py):
+    # the run record gives the whole-run wall, own-tree CPU-seconds,
+    # driver-JVM GC ms and JIT compile ms; each stage that ran and the
+    # validation carry the same four over their own window (a stage's
+    # sec is its build plus its write), and a resumed stage carries
+    # none. In local[N] mode the driver JVM is the whole runtime, so
+    # gc_ms and jit_ms are the run's total GC and compile cost.
+    run = report.run
     summary = {
-        "elapsed_sec": round(elapsed, 2),
+        "elapsed_sec": run.sec,
         "triples": report.triples_emitted,
-        "triples_per_sec": round(report.triples_emitted / elapsed, 1),
-        # whole-run CPU/GC telemetry (round-5 verdict item 2): own-tree
-        # CPU-seconds + driver-JVM GC ms over the pipeline window, and
-        # the same per stage below, so an own-CPU spread across
-        # identical runs is attributable from the summary alone. In
-        # local[N] mode the driver JVM is the whole runtime, so gc_ms
-        # is the run's total stop-the-world GC cost.
-        "own_cpu_s": (
-            round(cpu1 - cpu0, 2) if cpu0 is not None and cpu1 is not None else None
-        ),
-        "gc_ms": int(gc1 - gc0) if gc0 is not None and gc1 is not None else None,
-        # driver-JVM JIT compile time over the same window: a cold job
-        # pays it on top of its data work (session.JIT_POLICY)
-        "jit_ms": int(jit1 - jit0) if jit0 is not None and jit1 is not None else None,
+        "triples_per_sec": round(report.triples_emitted / run.sec, 1),
+        "own_cpu_s": run.own_cpu_s,
+        "gc_ms": run.gc_ms,
+        "jit_ms": run.jit_ms,
         "stages": {
-            name: {"rows": r.row_count, "skipped": r.skipped, "sec": r.elapsed_sec,
-                   "own_cpu_s": r.own_cpu_s, "gc_ms": r.gc_ms}
+            name: {"rows": r.row_count, "skipped": r.skipped, **asdict(r.usage or Usage())}
             for name, r in report.results.items()
         },
-        # inter-stage wall time (materialize's eager shared-stream build,
-        # end-of-run validation) — the part of elapsed_sec that no stage
-        # row accounts for
-        "sections": dict(report.sections),
+        "validate": asdict(report.validate),
     }
     print(json.dumps(summary, indent=2))
 

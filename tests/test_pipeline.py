@@ -10,6 +10,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from dataclasses import astuple
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +20,7 @@ from kgflow.pipeline import STAGES, run_pipeline
 
 N_FILES = 150
 FP = f"fixture-n{N_FILES}"
+USAGE_FIELDS = ("sec", "own_cpu_s", "gc_ms", "jit_ms")
 
 
 def _run(spark, run_dir):
@@ -60,16 +62,32 @@ def test_end_to_end_triples_match_golden(spark, base_run):
     assert tp / len(want) >= 0.95
 
 
-def test_resume_skips_completed_stages(spark, run_copy):
+@pytest.mark.parametrize("wiped", ["nodes", "edges"])
+def test_resume_skips_completed_stages(spark, base_run, run_copy, wiped):
+    """A rerun skips every stage. After one output stage is wiped only
+    it recomputes, whichever of the two materialize() builds for, and
+    its table equals the base run's."""
+    base_dir, _ = base_run
     second = _run(spark, run_copy)
-    assert set(second.skipped_stages()) == {
-        "ingested", "triples", "alias_edges", "canonical_map", "nodes", "edges",
-    }
-    # simulate a failed materialize: wipe 'edges', re-run — only it recomputes
-    shutil.rmtree(os.path.join(run_copy, "edges"))
+    assert set(second.skipped_stages()) == set(STAGES)
+    shutil.rmtree(os.path.join(run_copy, wiped))
     third = _run(spark, run_copy)
-    assert "edges" not in third.skipped_stages()
-    assert "triples" in third.skipped_stages()
+    assert set(STAGES) - set(third.skipped_stages()) == {wiped}
+    before = lin.read_stage(spark, base_dir, wiped)
+    after = lin.read_stage(spark, run_copy, wiped)
+    assert before.exceptAll(after).isEmpty()
+    assert after.exceptAll(before).isEmpty()
+
+
+def test_each_step_that_ran_has_one_usage_record(spark, base_run, run_copy):
+    """Every stage that ran, the validation and the whole run carry
+    wall, CPU, GC and JIT figures; a resumed stage did no work and
+    carries none."""
+    _, report = base_run
+    for usage in [*(r.usage for r in report.results.values()), report.validate, report.run]:
+        assert None not in astuple(usage)
+    resumed = _run(spark, run_copy)
+    assert [r.usage for r in resumed.results.values()] == [None] * len(STAGES)
 
 
 def test_resume_output_identical(spark, base_run, run_copy):
@@ -208,17 +226,32 @@ def test_alias_variants_share_canonical_node(spark, base_run):
     assert groups, "fixture corpus produced no alias groups — test vacuous"
 
 
-def test_cli_in_process_keeps_the_shared_session(spark, tmp_path):
+def test_cli_in_process_keeps_the_shared_session(spark, tmp_path, capsys):
     """main([...]) runs the pipeline in-process (no subprocess) and
-    leaves the caller's JVM running: only a script run reaps it."""
+    leaves the caller's JVM running: only a script run reaps it. Its
+    JSON summary comes from the report's records: a stage that ran and
+    the validation carry all four usage figures, a resumed stage none."""
     import run_pipeline as cli
 
     out = str(tmp_path / "run")
-    rc = cli.main(["--synthetic", "30", "--output", out, "--cores", "4"])
-    assert rc == 0
+    argv = ["--synthetic", "30", "--output", out, "--cores", "4"]
+    assert cli.main(argv) == 0
+    first = json.loads(capsys.readouterr().out)
     for name in STAGES:
         assert os.path.exists(os.path.join(out, name, "_MANIFEST.json"))
     assert spark.range(1).count() == 1
+
+    assert "sections" not in first
+    for key in ("elapsed_sec", "triples", "triples_per_sec", "own_cpu_s", "gc_ms", "jit_ms"):
+        assert first[key] is not None, key
+    for rec in [*first["stages"].values(), first["validate"]]:
+        assert all(rec[f] is not None for f in USAGE_FIELDS), rec
+
+    assert cli.main(argv) == 0
+    second = json.loads(capsys.readouterr().out)
+    assert [s["skipped"] for s in second["stages"].values()] == [True] * len(STAGES)
+    for rec in second["stages"].values():
+        assert all(rec[f] is None for f in USAGE_FIELDS), rec
 
 
 def test_materialize_spreads_hot_node_across_partitions(spark):
