@@ -8,10 +8,14 @@ Here both are first-class:
   * every stage write is followed by ONE cheap metadata-only pass over
     the files it just wrote (parquet footer counts — no data scan) that
     becomes the per-partition lineage table;
-  * a manifest JSON (stage name, input fingerprint, row count, file
-    count) marks the stage complete; the orchestrator skips any stage
+  * a manifest JSON (stage name, input fingerprint, row count, run_ts,
+    status) marks the stage complete; the orchestrator skips any stage
     whose manifest matches the current input fingerprint — the
-    north_rule's "failed stages resume without recompute".
+    north_rule's "failed stages resume without recompute";
+  * a stage may carry a check on the table it has just written (the
+    graph constraints on nodes and edges). It runs before the manifest
+    is published, so a complete manifest means a table that passed its
+    check, and a resumed stage needs no check again.
 
 The fingerprint chains: each stage's fingerprint hashes its params plus
 its upstream manifest's fingerprint, so changing the corpus or any
@@ -24,6 +28,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,29 +57,17 @@ def _manifest_path(stage_dir: str) -> str:
     return os.path.join(stage_dir, "_MANIFEST.json")
 
 
-def _complete_manifest(stage_dir: str, fp: str) -> "dict | None":
-    """The stage's manifest if it marks the stage complete under ``fp``."""
+def completed(run_dir: str, stage: str, fp: str) -> "StageResult | None":
+    """The skipped-stage result when the stage's manifest marks it
+    complete under ``fp``, else None. The row count comes from the
+    manifest, so resuming a stage reads no data."""
+    stage_dir = os.path.join(run_dir, stage)
     mp = _manifest_path(stage_dir)
     if not os.path.exists(mp):
         return None
     with open(mp) as f:
         manifest = json.load(f)
     if manifest.get("fingerprint") != fp or manifest.get("status") != "complete":
-        return None
-    return manifest
-
-
-def is_complete(stage_dir: str, fp: str) -> bool:
-    return _complete_manifest(stage_dir, fp) is not None
-
-
-def completed(run_dir: str, stage: str, fp: str) -> "StageResult | None":
-    """The skipped-stage result when the stage is complete under ``fp``,
-    else None. The row count comes from the manifest, so resuming a
-    stage reads no data."""
-    stage_dir = os.path.join(run_dir, stage)
-    manifest = _complete_manifest(stage_dir, fp)
-    if manifest is None:
         return None
     return StageResult(
         stage, os.path.join(stage_dir, "data"), fp, manifest["row_count"], skipped=True
@@ -104,15 +97,16 @@ def _footer_counts(data_path: str) -> list[tuple[str, int]]:
     return out
 
 
-def write_stage(df: DataFrame, stage: str, run_dir: str, fp: str, run_ts: str) -> StageResult:
-    """Write a stage table + lineage + manifest. Idempotent per fingerprint.
+def write_stage(df: DataFrame, stage: str, run_dir: str, fp: str, run_ts: str,
+                check: Callable[[DataFrame], None] | None = None) -> StageResult:
+    """Write a stage table + lineage, run ``check`` on the written table,
+    then publish the manifest.
 
-    The write replaces the table and its schema wholesale. The run dir
-    must be a local path: the lineage table and the manifest are written
-    from the driver."""
-    done = completed(run_dir, stage, fp)
-    if done is not None:
-        return done
+    The write replaces the table and its schema wholesale. A ``check``
+    that raises leaves the stage without a manifest, so the next run
+    recomputes it. Whether to skip a complete stage is the caller's
+    decision (``completed``). The run dir must be a local path: the
+    lineage table and the manifest are written from the driver."""
     stage_dir = os.path.join(run_dir, stage)
     data_path = os.path.join(stage_dir, "data")
 
@@ -125,9 +119,6 @@ def write_stage(df: DataFrame, stage: str, run_dir: str, fp: str, run_ts: str) -
     except FileNotFoundError:
         pass
 
-    import time
-
-    t0 = time.monotonic()
     df.write.mode("overwrite").parquet(data_path)
 
     # per-file counts from parquet footers (no Spark job), written as a
@@ -153,13 +144,14 @@ def write_stage(df: DataFrame, stage: str, run_dir: str, fp: str, run_ts: str) -
     )
     row_count = sum(n for _, n in footer)
 
-    elapsed = round(time.monotonic() - t0, 3)
+    if check is not None:
+        check(df.sparkSession.read.parquet(data_path))
+
     manifest = {
         "stage": stage,
         "fingerprint": fp,
         "row_count": int(row_count),
         "run_ts": run_ts,
-        "elapsed_sec": elapsed,
         "status": "complete",
     }
     tmp = _manifest_path(stage_dir) + ".tmp"

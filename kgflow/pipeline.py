@@ -12,17 +12,21 @@ data) — the reference's current_timestamp() ingest columns
 (csv-ingestion.py:176) make its reruns non-reproducible; ours are
 byte-identical for identical input.
 
+The graph constraints are checked where the graph is written: nodes
+carry `assert_unique_ids` and edges `assert_edge_endpoints` (against the
+stored nodes) as their `write_stage` check, which runs before the
+stage's manifest is published. A complete nodes or edges stage is
+therefore a checked one, and a resumed graph is not checked again.
+
 The run explains itself through one record per step: every stage that
-runs (its build plus its write), the end-of-run validation and the whole
-run each get an `audit.Usage` (wall, own-tree CPU, driver-JVM GC and JIT
-ms) from the same `audit.measure` window. A resumed stage has none: it
-did no work. `run_pipeline.py` prints its JSON summary from these
-records.
+runs (its build, its write and its check) and the whole run each get an
+`audit.Usage` (wall, own-tree CPU, driver-JVM GC and JIT ms) from the
+same `audit.measure` window. A resumed stage has none: it did no work.
+`run_pipeline.py` prints its JSON summary from these records.
 """
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import cache
 
@@ -46,8 +50,7 @@ STAGES = ("ingested", "triples", "alias_edges", "canonical_map", "nodes", "edges
 @dataclass
 class PipelineReport:
     results: dict[str, lin.StageResult] = field(default_factory=dict)
-    # what the end-of-run constraint validation and the whole run cost
-    validate: audit.Usage | None = None
+    # what the whole run cost
     run: audit.Usage = field(default_factory=audit.Usage)
 
     @property
@@ -72,17 +75,21 @@ def run_pipeline(
     ``corpus_fingerprint`` identifies the input data; stage fingerprints
     chain from it, so a resume on the same corpus skips completed stages
     and a corpus change invalidates all of them.
+
+    ``validate`` is ignored: the graph checks always run, before the
+    nodes and edges manifests publish. It stays because the benchmark
+    harness (``perfbench/workloads.py``) passes it.
     """
     report = PipelineReport()
 
-    def stage(name: str, fp: str, build) -> None:
+    def stage(name: str, fp: str, build, check=None) -> None:
         res = lin.completed(run_dir, name, fp)
         if res is None:
             # build() may run eager work (link, canonicalize and
             # materialize localCheckpoint intermediates), so the window
-            # spans the build and the write
+            # spans the build, the write and the check
             with audit.measure(spark) as usage:
-                res = lin.write_stage(build(), name, run_dir, fp, run_ts)
+                res = lin.write_stage(build(), name, run_dir, fp, run_ts, check)
             res.usage = usage
         report.results[name] = res
 
@@ -110,19 +117,7 @@ def run_pipeline(
         # materialize() eagerly checkpoints the canonicalized stream both
         # outputs share: the first output step that runs builds the pair
         pair = cache(lambda: materialize(triples, cmap, out_partitions=out_partitions))
-        stage("nodes", fp4, lambda: pair()[0])
-        stage("edges", fp4, lambda: pair()[1])
-
-        if validate:
-            # the two constraint probes are independent actions; running
-            # them from a 2-thread pool lets the second job back-fill the
-            # first's straggler tail (guide §2.6) — measured 4.6 -> 3.2 s
-            # in a fresh JVM at 200k files
-            with audit.measure(spark) as report.validate, ThreadPoolExecutor(2) as pool:
-                nodes = lin.read_stage(spark, run_dir, "nodes")
-                edges = lin.read_stage(spark, run_dir, "edges")
-                fu = pool.submit(assert_unique_ids, nodes)
-                fe = pool.submit(assert_edge_endpoints, nodes, edges)
-                fu.result()
-                fe.result()
+        stage("nodes", fp4, lambda: pair()[0], assert_unique_ids)
+        stage("edges", fp4, lambda: pair()[1],
+              lambda edges: assert_edge_endpoints(lin.read_stage(spark, run_dir, "nodes"), edges))
     return report

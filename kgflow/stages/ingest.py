@@ -5,8 +5,9 @@ Mirrors the reference's ingest-metadata step
 current_date, input_file_name) but deterministic: no wall-clock columns
 on the datapath (run_ts is an explicit parameter recorded in lineage,
 never in data), and the metadata we add is what the north_rule's
-invariants need — sha2(content,256) for the per-row content invariant
-and spark_partition_id for per-partition lineage.
+invariants need — sha2(content,256) for the per-row content invariant.
+Per-partition lineage comes from the stage writes' parquet footers
+(kgflow/lineage.py), not from a column.
 """
 
 from __future__ import annotations
@@ -16,9 +17,9 @@ from pyspark.sql import functions as F
 
 
 def ingest(source: DataFrame) -> DataFrame:
-    """source_files -> ingested (adds content_sha, file_id, ingest_partition).
+    """source_files -> ingested (adds content_sha).
 
-    Pure narrow transformation — no shuffle: every added column is a
+    Pure narrow transformation — no shuffle: the added column is a
     row-local expression, so this fuses into the downstream stage's scan
     under whole-stage codegen.
     """
@@ -36,21 +37,6 @@ def ingest(source: DataFrame) -> DataFrame:
         # (every triple's src_sha exists in the ingest table) holds for
         # null-content rows too.
         sha256_hex(F.coalesce(F.col("content"), F.lit(""))).alias("content_sha"),
-        # internal join key, not part of the sha invariant — a 128-bit
-        # xxhash64 pair is collision-safe here and lock-free
-        F.concat(
-            F.lpad(F.hex(F.xxhash64("repo", "path", "commit")), 16, "0"),
-            F.lpad(F.hex(F.xxhash64("commit", "path", "repo")), 16, "0"),
-        ).alias("file_id"),
-        # stable lineage partition: a pure function of the row key, NOT
-        # spark_partition_id() — the physical partitioning varies with
-        # cores and maxPartitionBytes, which made the persisted ingest
-        # table non-reproducible across parallelism levels (round-1
-        # advice). 1024 buckets bound per-partition lineage cardinality
-        # independent of cluster size.
-        F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(1024))
-        .cast("int")
-        .alias("ingest_partition"),
     )
 
 

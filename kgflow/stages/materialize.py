@@ -140,10 +140,14 @@ def materialize(
     # checkpointing: the eager localCheckpoint materializes deserialized
     # rows in memory, and src_sha (64-char hex) + repo + lang were ~40%
     # of that footprint for zero downstream use (guide §2.3 — project
-    # before the materialization boundary)
+    # before the materialization boundary). A graph node needs a name:
+    # a NULL endpoint (a NULL lang's WRITTEN_IN object, a NULL repo's
+    # DECLARES subject) would become a node with a NULL :ID, so those
+    # triples stay in the triples table but make no edge
     tc = (
         canonicalized_triples(triples, cmap)
         .select("subj", "pred", "obj")
+        .dropna(subset=["subj", "obj"])
         .localCheckpoint(eager=True)
     )
     nodes = build_nodes(tc)

@@ -17,28 +17,12 @@ as the previous one ends and new files have arrived).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from kgflow.schemas import SOURCE_FILES
 from kgflow.stages.extract import extract
 from kgflow.stages.ingest import ingest
-
-
-def _start(df: DataFrame, output_dir: str, checkpoint_dir: str,
-           available_now: bool) -> StreamingQuery:
-    """Append ``df`` to a parquet sink. PySpark rejects
-    ``trigger(availableNow=False)``, so the continuous mode is the
-    default trigger, not an availableNow one set to False."""
-    writer = (
-        df.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def incremental_extract(
@@ -73,4 +57,14 @@ def incremental_extract(
         .option("maxBytesPerTrigger", budget)
         .parquet(input_dir)
     )
-    return _start(extract(ingest(stream)), output_dir, checkpoint_dir, available_now)
+    writer = (
+        extract(ingest(stream)).writeStream.format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
+    # PySpark rejects trigger(availableNow=False), so the continuous
+    # mode is the default trigger, not an availableNow one set to False
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()

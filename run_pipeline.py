@@ -116,11 +116,12 @@ def main(argv: list[str] | None = None) -> int:
 
     # every figure comes from the report's records (kgflow/pipeline.py):
     # the run record gives the whole-run wall, own-tree CPU-seconds,
-    # driver-JVM GC ms and JIT compile ms; each stage that ran and the
-    # validation carry the same four over their own window (a stage's
-    # sec is its build plus its write), and a resumed stage carries
-    # none. In local[N] mode the driver JVM is the whole runtime, so
-    # gc_ms and jit_ms are the run's total GC and compile cost.
+    # driver-JVM GC ms and JIT compile ms; each stage that ran carries
+    # the same four over its own window (a stage's sec is its build plus
+    # its write, and for nodes and edges their constraint check too),
+    # and a resumed stage carries none. In local[N] mode the driver JVM
+    # is the whole runtime, so gc_ms and jit_ms are the run's total GC
+    # and compile cost.
     run = report.run
     summary = {
         "elapsed_sec": run.sec,
@@ -133,7 +134,6 @@ def main(argv: list[str] | None = None) -> int:
             name: {"rows": r.row_count, "skipped": r.skipped, **asdict(r.usage or Usage())}
             for name, r in report.results.items()
         },
-        "validate": asdict(report.validate),
     }
     print(json.dumps(summary, indent=2))
 

@@ -10,13 +10,15 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections import Counter
 from dataclasses import astuple
 
 import pytest
 from pyspark.sql import functions as F
 
-from kgflow import fixtures, lineage as lin
+from kgflow import fixtures, lineage as lin, pipeline
 from kgflow.pipeline import STAGES, run_pipeline
+from kgflow.schemas import SOURCE_FILES
 
 N_FILES = 150
 FP = f"fixture-n{N_FILES}"
@@ -79,12 +81,81 @@ def test_resume_skips_completed_stages(spark, base_run, run_copy, wiped):
     assert after.exceptAll(before).isEmpty()
 
 
-def test_each_step_that_ran_has_one_usage_record(spark, base_run, run_copy):
-    """Every stage that ran, the validation and the whole run carry
-    wall, CPU, GC and JIT figures; a resumed stage did no work and
-    carries none."""
+@pytest.mark.parametrize(
+    "wiped, check", [("nodes", "assert_unique_ids"), ("edges", "assert_edge_endpoints")]
+)
+def test_failed_check_leaves_stage_unpublished(spark, base_run, run_copy, monkeypatch,
+                                               wiped, check):
+    """A stage whose constraint check raises publishes no manifest, so
+    the next run recomputes that stage and only that stage."""
     _, report = base_run
-    for usage in [*(r.usage for r in report.results.values()), report.validate, report.run]:
+    shutil.rmtree(os.path.join(run_copy, wiped))
+
+    def fails(*_):
+        raise AssertionError("check failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, check, fails)
+        with pytest.raises(AssertionError, match="check failed"):
+            _run(spark, run_copy)
+    assert lin.completed(run_copy, wiped, report.results[wiped].fingerprint) is None
+    rerun = _run(spark, run_copy)
+    assert set(STAGES) - set(rerun.skipped_stages()) == {wiped}
+
+
+def test_checks_run_once_when_written_and_never_on_resume(spark, tmp_path, monkeypatch):
+    """Each graph check runs once, as its stage is written; a full
+    resume reads only manifests and runs neither."""
+    calls = Counter()
+    for name in ("assert_unique_ids", "assert_edge_endpoints"):
+        def counted(*args, _name=name, _check=getattr(pipeline, name)):
+            calls[_name] += 1
+            return _check(*args)
+
+        monkeypatch.setattr(pipeline, name, counted)
+    run_dir = str(tmp_path / "run")
+    src = fixtures.source_files(spark, 30)
+    run_pipeline(spark, src, run_dir, corpus_fingerprint="fixture-n30")
+    assert calls == {"assert_unique_ids": 1, "assert_edge_endpoints": 1}
+    calls.clear()
+    resumed = run_pipeline(spark, src, run_dir, corpus_fingerprint="fixture-n30")
+    assert set(resumed.skipped_stages()) == set(STAGES)
+    assert not calls
+
+
+def test_null_lang_or_repo_makes_no_nameless_node(spark, tmp_path):
+    """A NULL lang (the WRITTEN_IN object) or a NULL repo (the DECLARES
+    subject) leaves its triple in `triples` but makes no node or edge;
+    the run completes and the files' other triples still become edges."""
+    odd = spark.createDataFrame(
+        [("repo_x", "src/nolang.py", "c1", None, "import os\ndef f_nolang():\n"),
+         (None, "src/norepo.py", "c2", "python", "import sys\ndef f_norepo():\n")],
+        SOURCE_FILES,
+    )
+    run_dir = str(tmp_path / "run")
+    src = fixtures.source_files(spark, 30).unionByName(odd)
+    run_pipeline(spark, src, run_dir, corpus_fingerprint="fixture-n30-null-endpoints")
+
+    triples = lin.read_stage(spark, run_dir, "triples")
+    nameless = triples.where(F.col("subj").isNull() | F.col("obj").isNull())
+    assert sorted(r.pred for r in nameless.collect()) == ["DECLARES", "WRITTEN_IN"]
+    nodes = lin.read_stage(spark, run_dir, "nodes")
+    edges = lin.read_stage(spark, run_dir, "edges")
+    assert nodes.where(F.col(":ID").isNull()).isEmpty()
+    assert edges.where(F.col(":START_ID").isNull() | F.col(":END_ID").isNull()).isEmpty()
+    norepo = {
+        (r[0], r[1])
+        for r in edges.where(F.col(":START_ID") == "File:src/norepo.py")
+        .select(":TYPE", ":END_ID").collect()
+    }
+    assert norepo == {("WRITTEN_IN", "Language:python"), ("IMPORTS", "Module:sys")}
+
+
+def test_each_step_that_ran_has_one_usage_record(spark, base_run, run_copy):
+    """Every stage that ran and the whole run carry wall, CPU, GC and
+    JIT figures; a resumed stage did no work and carries none."""
+    _, report = base_run
+    for usage in [*(r.usage for r in report.results.values()), report.run]:
         assert None not in astuple(usage)
     resumed = _run(spark, run_copy)
     assert [r.usage for r in resumed.results.values()] == [None] * len(STAGES)
@@ -177,10 +248,9 @@ def test_failed_rewrite_invalidates_completed_stage(spark, tmp_path):
     write that dies part-way: the overwrite has already deleted A's
     data, so A's manifest must no longer mark the stage complete."""
     run_dir = str(tmp_path / "run")
-    stage_dir = os.path.join(run_dir, "s")
     ok = spark.range(100).withColumn("v", F.col("id") * 2)
     lin.write_stage(ok, "s", run_dir, "fp-A", "1970-01-01T00:00:00Z")
-    assert lin.is_complete(stage_dir, "fp-A")
+    assert lin.completed(run_dir, "s", "fp-A") is not None
 
     dies = spark.range(100).withColumn(
         "v", F.when(F.col("id") == 57, F.raise_error(F.lit("killed mid-write")))
@@ -188,8 +258,8 @@ def test_failed_rewrite_invalidates_completed_stage(spark, tmp_path):
     )
     with pytest.raises(Exception, match="killed mid-write"):
         lin.write_stage(dies, "s", run_dir, "fp-B", "1970-01-01T00:00:00Z")
-    assert not lin.is_complete(stage_dir, "fp-A")
-    assert not lin.is_complete(stage_dir, "fp-B")
+    assert lin.completed(run_dir, "s", "fp-A") is None
+    assert lin.completed(run_dir, "s", "fp-B") is None
 
 
 def test_lineage_per_partition_counts_sum_to_total(spark, base_run):
@@ -229,8 +299,8 @@ def test_alias_variants_share_canonical_node(spark, base_run):
 def test_cli_in_process_keeps_the_shared_session(spark, tmp_path, capsys):
     """main([...]) runs the pipeline in-process (no subprocess) and
     leaves the caller's JVM running: only a script run reaps it. Its
-    JSON summary comes from the report's records: a stage that ran and
-    the validation carry all four usage figures, a resumed stage none."""
+    JSON summary comes from the report's records: a stage that ran
+    carries all four usage figures, a resumed stage none."""
     import run_pipeline as cli
 
     out = str(tmp_path / "run")
@@ -241,10 +311,10 @@ def test_cli_in_process_keeps_the_shared_session(spark, tmp_path, capsys):
         assert os.path.exists(os.path.join(out, name, "_MANIFEST.json"))
     assert spark.range(1).count() == 1
 
-    assert "sections" not in first
+    assert "sections" not in first and "validate" not in first
     for key in ("elapsed_sec", "triples", "triples_per_sec", "own_cpu_s", "gc_ms", "jit_ms"):
         assert first[key] is not None, key
-    for rec in [*first["stages"].values(), first["validate"]]:
+    for rec in first["stages"].values():
         assert all(rec[f] is not None for f in USAGE_FIELDS), rec
 
     assert cli.main(argv) == 0
