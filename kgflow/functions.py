@@ -1,32 +1,9 @@
-"""Shared column functions.
-
-sha256_hex: SHA-256 as lowercase hex. Implemented with the JVM builtin
-``F.sha2(col, 256)`` — pure whole-stage-codegen, no Python boundary.
-
-History: rounds 1-6 routed this through an Arrow-vectorized pandas UDF
-because a round-1 measurement showed the builtin anti-scaling with
-thread count (a pure sha2 job at local[32] ran 2x SLOWER than at
-local[8]). Re-measured in round 7 on Spark 4.1.2 (fresh JVMs, noop
-sink, 200k-file corpus): the builtin now scales normally — 0.84-1.04 s
-at local[32] vs ~2.0 s at local[8] — and beats the Arrow UDF (2.2-2.8 s
-warm at local[32], with a double-digit first-use cost for spawning the
-32 Python workers that a fresh-subprocess pipeline run pays every
-time). The UDF's JVM<->Python transfer of the full payload was the
-dominant cost of the ingest stage, so the builtin is now the
-implementation (guide §4.1: prefer builtins; OPTIMIZATION_r07.md has
-the measurements). Output is the identical lowercase-hex digest, so
-DuckDB oracles using sha256() still match, as do all stored stage
-tables and golden fixtures.
-"""
+"""Shared column functions."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def sha256_hex(s) -> Column:
-    return F.sha2(s, 256)
 
 
 def pair_structs(arr) -> Column:

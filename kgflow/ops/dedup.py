@@ -86,10 +86,8 @@ def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Exact dedup by content hash: groups with >1 doc, keeping the
     representative (min id) — sha2-groupBy, the hash-partition-friendly
     shape."""
-    from kgflow.functions import sha256_hex
-
     return (
-        docs.select("doc_id", sha256_hex(F.col("text")).alias("text_sha"))
+        docs.select("doc_id", F.sha2(F.col("text"), 256).alias("text_sha"))
         .groupBy("text_sha")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

@@ -6,6 +6,9 @@ per-task clusters only via Delta tables,
 databricks/jobs/etl-pipeline-job.json:12-85). That is exactly what
 makes per-stage checkpoint/resume trivial: a stage whose manifest
 matches the input fingerprint is skipped and its table read back.
+The chain is strict: only `ingested` reads the source, in the one pass
+that hashes the content and finds each file's mentions, and every later
+stage builds from the table its upstream stage stored.
 
 `run_ts` is an explicit parameter (recorded in manifests, never in
 data) — the reference's current_timestamp() ingest columns
@@ -36,7 +39,7 @@ from kgflow import audit
 from kgflow import lineage as lin
 from kgflow.stages.canonicalize import canonical_map
 from kgflow.stages.extract import extract
-from kgflow.stages.ingest import ingest, ingest_manifest
+from kgflow.stages.ingest import ingest
 from kgflow.stages.link import link
 from kgflow.stages.materialize import (
     assert_edge_endpoints,
@@ -94,15 +97,13 @@ def run_pipeline(
         report.results[name] = res
 
     with audit.measure(spark) as report.run:
-        fp0 = lin.fingerprint({"corpus": corpus_fingerprint})
-        # the persisted ingest table is the metadata-only lineage anchor
-        # (no content rewrite); triples hash the content again inline in
-        # their own scan (F.sha2, whole-stage codegen), the same
-        # extract(ingest(...)) the streaming path runs
-        stage("ingested", fp0, lambda: ingest_manifest(source))
+        # "ingested" names the table's layout: run dirs whose ingested
+        # table has no mentions column recompute every stage
+        fp0 = lin.fingerprint({"corpus": corpus_fingerprint, "ingested": "mentions"})
+        stage("ingested", fp0, lambda: ingest(source))
 
         fp1 = lin.fingerprint({}, fp0)
-        stage("triples", fp1, lambda: extract(ingest(source)))
+        stage("triples", fp1, lambda: extract(lin.read_stage(spark, run_dir, "ingested")))
         triples = lin.read_stage(spark, run_dir, "triples")
 
         fp2 = lin.fingerprint({}, fp1)

@@ -4,9 +4,12 @@ Pure JVM ``regexp_extract_all`` + higher-order array functions: stays
 inside whole-stage codegen, zero Python on the datapath. A pure per-row
 function of (lang, content) — no cross-row state — so partitioning
 cannot change the output (SURVEY.md §7.4 determinism requirement).
-Batch (``pipeline.run_pipeline``) and stream
-(``streaming.incremental``) both build triples as
-``extract(ingest(source))``.
+The work is split at the explode: ``mentions`` is the per-file array,
+computed once by ``ingest`` in its one content pass and stored in the
+``ingested`` table; ``extract`` explodes it. Batch
+(``pipeline.run_pipeline``) builds triples as ``extract`` over the
+stored ``ingested`` table, the stream (``streaming.incremental``) as
+``extract(ingest(stream))``: the same two functions.
 
 The reference's only extraction analogue is expression-level
 projection of already-structured rows (graph-transformation.py:77-116);
@@ -22,10 +25,8 @@ Emitted predicates (north_star):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from kgflow.stages.ingest import ingest
 
 # Identifier char classes written with explicit unicode ranges so the
 # JVM regex engine (ASCII \w) and Python's re (unicode \w) agree.
@@ -37,81 +38,93 @@ DOTTED = f"{IDENT}(?:\\.{IDENT})*"
 # (lang, predicate, regex-with-one-capture-group). Every construct used
 # is portable between java.util.regex and Python re; the tests check
 # extract() against a Python-re reference over the same RULES.
+#
+# Rules run over "\n" + content, and a rule anchored at a line start is
+# written with a literal "\n" in place of (?m)^. java.util.regex's (?m)^
+# also matches after \r, U+0085 and U+2028, and its `.` stops at them;
+# Python's do not. The literal form gives both engines Python's
+# \n-only line breaks (and `.` is written [^\n] for the same reason),
+# and lets java.util.regex seek the literal instead of trying every
+# position. A match never ends in "\n", so consuming the one before it
+# skips no match that (?m)^ would have found.
 RULES: list[tuple[str, str, str]] = [
-    ("python", "IMPORTS", rf"(?m)^import\s+({DOTTED})"),
-    ("python", "IMPORTS", rf"(?m)^from\s+({DOTTED})\s+import"),
-    ("python", "DECLARES", rf"(?m)^def\s+({IDENT})"),
-    ("python", "DECLARES", rf"(?m)^class\s+({IDENT})"),
+    ("python", "IMPORTS", rf"\nimport\s+({DOTTED})"),
+    ("python", "IMPORTS", rf"\nfrom\s+({DOTTED})\s+import"),
+    ("python", "DECLARES", rf"\ndef\s+({IDENT})"),
+    ("python", "DECLARES", rf"\nclass\s+({IDENT})"),
     # call-site detection (schemas.py CALLS predicate): a bare
     # `ident(` at line start — declaration keywords (def/class/
     # function/func) put a space before the name, so they never match
-    ("python", "CALLS", rf"(?m)^({IDENT})\("),
-    ("javascript", "IMPORTS", rf"(?m)^import\s+.*?\s+from\s+'([^']+)'"),
+    ("python", "CALLS", rf"\n({IDENT})\("),
+    ("javascript", "IMPORTS", r"\nimport\s+[^\n]*?\s+from\s+'([^']+)'"),
     ("javascript", "IMPORTS", r"require\('([^']+)'\)"),
-    ("javascript", "DECLARES", rf"(?m)^function\s+({IDENT})"),
-    ("javascript", "DECLARES", rf"(?m)^class\s+({IDENT})"),
-    ("javascript", "CALLS", rf"(?m)^({IDENT})\("),
-    ("java", "IMPORTS", rf"(?m)^import\s+({DOTTED})\.{IDENT}\s*;"),
-    ("java", "DECLARES", rf"(?m)^(?:public\s+|final\s+)*class\s+({IDENT})"),
-    ("go", "IMPORTS", r'(?m)^import\s+"([^"]+)"'),
-    ("go", "DECLARES", rf"(?m)^func\s+({IDENT})"),
-    ("go", "CALLS", rf"(?m)^({IDENT})\("),
-    ("sql", "DECLARES", rf"(?mi)^CREATE\s+TABLE\s+({IDENT})"),
+    ("javascript", "DECLARES", rf"\nfunction\s+({IDENT})"),
+    ("javascript", "DECLARES", rf"\nclass\s+({IDENT})"),
+    ("javascript", "CALLS", rf"\n({IDENT})\("),
+    ("java", "IMPORTS", rf"\nimport\s+({DOTTED})\.{IDENT}\s*;"),
+    ("java", "DECLARES", rf"\n(?:public\s+|final\s+)*class\s+({IDENT})"),
+    ("go", "IMPORTS", r'\nimport\s+"([^"]+)"'),
+    ("go", "DECLARES", rf"\nfunc\s+({IDENT})"),
+    ("go", "CALLS", rf"\n({IDENT})\("),
+    ("sql", "DECLARES", rf"(?i)\nCREATE\s+TABLE\s+({IDENT})"),
     ("sql", "IMPORTS", rf"(?i)\bFROM\s+({IDENT})"),
 ]
 
 _LANGS = sorted({lang for lang, _, _ in RULES})
 
 
-def extract(ingested: DataFrame) -> DataFrame:
-    """ingested -> candidate triples (subj, pred, obj, src_sha, repo, lang).
+def mentions(lang: Column, content: Column) -> Column:
+    """A file's mentions, ``array<struct<pred, obj>>``: its WRITTEN_IN
+    entry first, then regexp_extract_all per rule of its language, each
+    array tagged with its predicate via transform(). ``content`` must be
+    non-NULL (``ingest`` coalesces it): concat-with-NULL would null the
+    whole array and silently drop the file's WRITTEN_IN triple.
 
-    regexp_extract_all per rule, arrays tagged with their predicate via
-    transform(), concatenated, exploded: one narrow stage, no shuffle
-    until the caller aggregates. Match order within one (rule, row) is
-    document order; duplicates are preserved here (frequency may matter
-    to downstream scoring) — dedup happens at materialize (reference
-    MERGE semantics, neo4j-loading.py:230-234).
+    Match order within one (rule, row) is document order; duplicates are
+    preserved (frequency may matter to downstream scoring) — dedup
+    happens at materialize (reference MERGE semantics,
+    neo4j-loading.py:230-234).
     """
     def tagger(pred: str):
         # single-arg lambda: a 2-arg lambda would be treated as
         # (element, index) by F.transform
         return lambda m: F.struct(F.lit(pred).alias("pred"), m.alias("obj"))
 
-    # NULL content must behave like empty content: regexp_extract_all of
-    # NULL is NULL, and concat-with-NULL nulls the whole mention array,
-    # which would silently drop the file's WRITTEN_IN triple
-    content = F.coalesce(F.col("content"), F.lit(""))
+    text = F.concat(F.lit("\n"), content)
     per_lang = []
-    for lang in _LANGS:
+    for lang_name in _LANGS:
         arrays = [
             F.transform(
-                F.regexp_extract_all(content, F.lit(pattern), F.lit(1)),
+                F.regexp_extract_all(text, F.lit(pattern), F.lit(1)),
                 tagger(pred),
             )
             for rule_lang, pred, pattern in RULES
-            if rule_lang == lang
+            if rule_lang == lang_name
         ]
-        per_lang.append((lang, F.concat(*arrays) if len(arrays) > 1 else arrays[0]))
+        per_lang.append((lang_name, F.concat(*arrays) if len(arrays) > 1 else arrays[0]))
 
-    mentions = F.when(F.col("lang") == per_lang[0][0], per_lang[0][1])
-    for lang, arr in per_lang[1:]:
-        mentions = mentions.when(F.col("lang") == lang, arr)
-    mentions = mentions.otherwise(F.array().cast("array<struct<pred:string,obj:string>>"))
-    # fold the WRITTEN_IN projection into the same array: one explode,
-    # one corpus scan (a unioned projection branch would re-scan the
-    # whole corpus a second time — union branches share nothing)
-    mentions = F.concat(
-        F.array(F.struct(F.lit("WRITTEN_IN").alias("pred"), F.col("lang").alias("obj"))),
-        mentions,
+    by_lang = F.when(lang == per_lang[0][0], per_lang[0][1])
+    for lang_name, arr in per_lang[1:]:
+        by_lang = by_lang.when(lang == lang_name, arr)
+    by_lang = by_lang.otherwise(F.array().cast("array<struct<pred:string,obj:string>>"))
+    # the WRITTEN_IN projection rides in the same array: one explode
+    # (a unioned projection branch would be a second pass over the rows)
+    return F.concat(
+        F.array(F.struct(F.lit("WRITTEN_IN").alias("pred"), lang.alias("obj"))),
+        by_lang,
     )
 
-    exploded = (
-        ingested.select(
-            "repo", "lang", "content_sha",
-            F.concat_ws("/", "repo", "path").alias("file_ref"),
-            F.explode(mentions).alias("m"),
-        )
+
+def extract(ingested: DataFrame) -> DataFrame:
+    """ingested -> candidate triples (subj, pred, obj, src_sha, repo, lang).
+
+    Explodes each file's stored ``mentions``: one narrow stage, no
+    shuffle until the caller aggregates, and no content read.
+    """
+    exploded = ingested.select(
+        "repo", "lang", "content_sha",
+        F.concat_ws("/", "repo", "path").alias("file_ref"),
+        F.explode("mentions").alias("m"),
     )
     return exploded.select(
         F.when(F.col("m.pred") == "DECLARES", F.col("repo"))
@@ -126,14 +139,15 @@ def extract(ingested: DataFrame) -> DataFrame:
 
 
 def extract_with_manifest(source: DataFrame, manifest: DataFrame, **_ignored) -> DataFrame:
-    """Alias for ``extract(ingest(source))``; ``manifest`` and every
-    keyword argument are ignored.
+    """Alias for ``extract(manifest)``; ``source`` and every keyword
+    argument are ignored.
 
     Kept only because the benchmark harness (``perfbench/workloads.py``)
     imports this name at module level and its traced run calls it as
     ``(source, manifest, engine="native", broadcast=...,
-    assume_unique=True)``; through this alias that run measures the same
-    extract path ``run_pipeline`` runs. ROADMAP direction 1 moves the
-    harness onto ``run_pipeline`` and deletes this alias.
+    assume_unique=True)`` with ``manifest`` the stored ``ingested``
+    table; through this alias that run builds triples the way
+    ``run_pipeline`` does. ROADMAP direction 1 moves the harness onto
+    ``run_pipeline`` and deletes this alias.
     """
-    return extract(ingest(source))
+    return extract(manifest)

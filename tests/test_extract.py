@@ -9,6 +9,7 @@ from collections import Counter
 from pyspark.sql import functions as F
 
 from kgflow import fixtures
+from kgflow.schemas import SOURCE_FILES
 from kgflow.stages.extract import RULES, extract
 from kgflow.stages.ingest import ingest
 
@@ -22,7 +23,8 @@ def _distinct_triples(df):
 def _reference_triples(source_rows) -> Counter:
     """Plain-Python extraction over collected source rows: Python ``re``
     over the same RULES and ``hashlib`` for the sha, independent of the
-    JVM regex engine and of F.sha2. Rows of extract()'s schema
+    JVM regex engine and of F.sha2. Rules run over "\n" + content, as
+    in extract.mentions. Rows of extract()'s schema
     (subj, pred, obj, src_sha, repo, lang), as a multiset."""
     out: Counter = Counter()
     for r in source_rows:
@@ -33,7 +35,7 @@ def _reference_triples(source_rows) -> Counter:
         for lang, pred, pattern in RULES:
             if lang != r.lang:
                 continue
-            for obj in re.findall(pattern, content):
+            for obj in re.findall(pattern, "\n" + content):
                 subj = r.repo if pred == "DECLARES" else file_ref
                 out[(subj, pred, obj, sha, r.repo, r.lang)] += 1
     return out
@@ -53,10 +55,24 @@ def test_extraction_precision_recall_vs_golden(spark):
     assert recall >= 0.95, f"recall {recall:.4f}; missing: {sorted(want - got)[:10]}"
 
 
+# Only "\n" breaks a line. java.util.regex's (?m)^ also matches after
+# \r, U+0085 and U+2028, and its `.` stops at \r; Python's do neither.
+LINE_BREAK_ROWS = [
+    ("lb", "src/cr.py", "c", "python", "a\rdef cr_only(x):\ndef nl_ok(y):\n"),
+    ("lb", "src/nel.py", "c", "python", "a\u0085class nel_only:\nclass NlOk:\n"),
+    ("lb", "src/ls.go", "c", "go", "x\u2028func ls_only() {}\nfunc nlOk() {}\n"),
+    ("lb", "src/crlf.py", "c", "python", "import os\r\ndef crlf_ok():\r\n"),
+    ("lb", "src/imp.js", "c", "javascript", "import {a,\rb} from 'mod_x'\n"),
+]
+
+
 def test_extract_matches_python_re_reference(spark):
     """java.util.regex and Python re agree on every rule: extract() and
-    the plain-Python reference emit the same multiset of rows."""
-    src = fixtures.source_files(spark, N_FILES)
+    the plain-Python reference emit the same multiset of rows, on the
+    fixture corpus and on LINE_BREAK_ROWS."""
+    src = fixtures.source_files(spark, N_FILES).unionByName(
+        spark.createDataFrame(LINE_BREAK_ROWS, SOURCE_FILES)
+    )
     rows = src.collect()
     want = _reference_triples(rows)
     got = Counter(tuple(r) for r in extract(ingest(src)).collect())
@@ -66,6 +82,11 @@ def test_extract_matches_python_re_reference(spark):
     # the comparison covers CALLS and a NULL-content file
     assert any(pred == "CALLS" for _, pred, *_ in want)
     assert any(r.content is None for r in rows)
+    # no declaration after a bare \r, U+0085 or U+2028; a JS import
+    # whose braces span a \r is still found
+    line_break_objs = {obj for _, pred, obj, _, repo, _ in got
+                       if repo == "lb" and pred != "WRITTEN_IN"}
+    assert line_break_objs == {"nl_ok", "NlOk", "nlOk", "os", "crlf_ok", "mod_x"}
 
 
 def test_content_sha_preserved_through_extraction(spark):
@@ -140,9 +161,10 @@ def test_null_content_emits_written_in_both_engines(spark):
 
 
 def test_extract_with_manifest_alias_serves_perfbench(spark):
-    """perfbench imports extract_with_manifest at module level and its
-    traced run calls it with these exact arguments; the alias must keep
-    both working and return extract(ingest(source))."""
+    """perfbench imports extract_with_manifest and ingest_manifest at
+    module level and its traced run calls them with these exact
+    arguments; the aliases must keep both working and return
+    extract(ingest(source))."""
     import perfbench.workloads  # noqa: F401  fails at import if the alias goes
     from kgflow.stages.extract import extract_with_manifest
     from kgflow.stages.ingest import ingest_manifest
