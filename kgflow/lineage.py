@@ -13,7 +13,7 @@ Here both are first-class:
     whose manifest matches the current input fingerprint — the
     north_rule's "failed stages resume without recompute";
   * a stage may carry a check on the table it has just written (the
-    graph constraints on nodes and edges). It runs before the manifest
+    graph constraints on nodes). It runs before the manifest
     is published, so a complete manifest means a table that passed its
     check, and a resumed stage needs no check again.
 

@@ -8,18 +8,19 @@ makes per-stage checkpoint/resume trivial: a stage whose manifest
 matches the input fingerprint is skipped and its table read back.
 The chain is strict: only `ingested` reads the source, in the one pass
 that hashes the content and finds each file's mentions, and every later
-stage builds from the table its upstream stage stored.
+stage builds from the table its upstream stage stored, down to `nodes`,
+the distinct endpoints of the stored `edges`.
 
 `run_ts` is an explicit parameter (recorded in manifests, never in
 data) — the reference's current_timestamp() ingest columns
 (csv-ingestion.py:176) make its reruns non-reproducible; ours are
 byte-identical for identical input.
 
-The graph constraints are checked where the graph is written: nodes
-carry `assert_unique_ids` and edges `assert_edge_endpoints` (against the
-stored nodes) as their `write_stage` check, which runs before the
-stage's manifest is published. A complete nodes or edges stage is
-therefore a checked one, and a resumed graph is not checked again.
+The graph constraints are checked where the graph is completed: the
+nodes stage's `write_stage` check runs `assert_unique_ids` and
+`assert_edge_endpoints` (against the stored edges) before the nodes
+manifest is published. A complete nodes stage is therefore a checked
+graph, and a resumed graph is not checked again.
 
 The run explains itself through one record per step: every stage that
 runs (its build, its write and its check) and the whole run each get an
@@ -31,7 +32,6 @@ same `audit.measure` window. A resumed stage has none: it did no work.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from functools import cache
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -44,10 +44,11 @@ from kgflow.stages.link import link
 from kgflow.stages.materialize import (
     assert_edge_endpoints,
     assert_unique_ids,
-    materialize,
+    build_edges,
+    build_nodes,
 )
 
-STAGES = ("ingested", "triples", "alias_edges", "canonical_map", "nodes", "edges")
+STAGES = ("ingested", "triples", "alias_edges", "canonical_map", "edges", "nodes")
 
 
 @dataclass
@@ -80,7 +81,7 @@ def run_pipeline(
     and a corpus change invalidates all of them.
 
     ``validate`` is ignored: the graph checks always run, before the
-    nodes and edges manifests publish. It stays because the benchmark
+    nodes manifest publishes. It stays because the benchmark
     harness (``perfbench/workloads.py``) passes it.
     """
     report = PipelineReport()
@@ -88,8 +89,8 @@ def run_pipeline(
     def stage(name: str, fp: str, build, check=None) -> None:
         res = lin.completed(run_dir, name, fp)
         if res is None:
-            # build() may run eager work (link, canonicalize and
-            # materialize localCheckpoint intermediates), so the window
+            # build() may run eager work (link and canonicalize
+            # localCheckpoint intermediates), so the window
             # spans the build, the write and the check
             with audit.measure(spark) as usage:
                 res = lin.write_stage(build(), name, run_dir, fp, run_ts, check)
@@ -115,10 +116,13 @@ def run_pipeline(
         cmap = lin.read_stage(spark, run_dir, "canonical_map")
 
         fp4 = lin.fingerprint({"out_partitions": out_partitions}, fp3)
-        # materialize() eagerly checkpoints the canonicalized stream both
-        # outputs share: the first output step that runs builds the pair
-        pair = cache(lambda: materialize(triples, cmap, out_partitions=out_partitions))
-        stage("nodes", fp4, lambda: pair()[0], assert_unique_ids)
-        stage("edges", fp4, lambda: pair()[1],
-              lambda edges: assert_edge_endpoints(lin.read_stage(spark, run_dir, "nodes"), edges))
+        stage("edges", fp4, lambda: build_edges(triples, cmap, out_partitions))
+
+        def check_graph(nodes: DataFrame) -> None:
+            assert_unique_ids(nodes)
+            assert_edge_endpoints(nodes, lin.read_stage(spark, run_dir, "edges"))
+
+        stage("nodes", lin.fingerprint({}, fp4),
+              lambda: build_nodes(lin.read_stage(spark, run_dir, "edges"), out_partitions),
+              check_graph)
     return report

@@ -34,10 +34,13 @@ _ID0 = "[A-Za-z_\u00c0-\uffef]"
 _IDC = "[A-Za-z0-9_\u00c0-\uffef]"
 IDENT = f"{_ID0}{_IDC}*"
 DOTTED = f"{IDENT}(?:\\.{IDENT})*"
+# java.util.regex's \s, spelt out: Python's \s also matches U+00A0, U+3000
+_WS = r"[ \t\n\x0B\f\r]"
 
 # (lang, predicate, regex-with-one-capture-group). Every construct used
-# is portable between java.util.regex and Python re; the tests check
-# extract() against a Python-re reference over the same RULES.
+# is portable between java.util.regex and Python re (whitespace is
+# written _WS, never \s); the tests check extract() against a Python-re
+# reference over the same RULES.
 #
 # Rules run over "\n" + content, and a rule anchored at a line start is
 # written with a literal "\n" in place of (?m)^. java.util.regex's (?m)^
@@ -48,26 +51,26 @@ DOTTED = f"{IDENT}(?:\\.{IDENT})*"
 # position. A match never ends in "\n", so consuming the one before it
 # skips no match that (?m)^ would have found.
 RULES: list[tuple[str, str, str]] = [
-    ("python", "IMPORTS", rf"\nimport\s+({DOTTED})"),
-    ("python", "IMPORTS", rf"\nfrom\s+({DOTTED})\s+import"),
-    ("python", "DECLARES", rf"\ndef\s+({IDENT})"),
-    ("python", "DECLARES", rf"\nclass\s+({IDENT})"),
+    ("python", "IMPORTS", rf"\nimport{_WS}+({DOTTED})"),
+    ("python", "IMPORTS", rf"\nfrom{_WS}+({DOTTED}){_WS}+import"),
+    ("python", "DECLARES", rf"\ndef{_WS}+({IDENT})"),
+    ("python", "DECLARES", rf"\nclass{_WS}+({IDENT})"),
     # call-site detection (schemas.py CALLS predicate): a bare
     # `ident(` at line start — declaration keywords (def/class/
     # function/func) put a space before the name, so they never match
     ("python", "CALLS", rf"\n({IDENT})\("),
-    ("javascript", "IMPORTS", r"\nimport\s+[^\n]*?\s+from\s+'([^']+)'"),
+    ("javascript", "IMPORTS", rf"\nimport{_WS}+[^\n]*?{_WS}+from{_WS}+'([^']+)'"),
     ("javascript", "IMPORTS", r"require\('([^']+)'\)"),
-    ("javascript", "DECLARES", rf"\nfunction\s+({IDENT})"),
-    ("javascript", "DECLARES", rf"\nclass\s+({IDENT})"),
+    ("javascript", "DECLARES", rf"\nfunction{_WS}+({IDENT})"),
+    ("javascript", "DECLARES", rf"\nclass{_WS}+({IDENT})"),
     ("javascript", "CALLS", rf"\n({IDENT})\("),
-    ("java", "IMPORTS", rf"\nimport\s+({DOTTED})\.{IDENT}\s*;"),
-    ("java", "DECLARES", rf"\n(?:public\s+|final\s+)*class\s+({IDENT})"),
-    ("go", "IMPORTS", r'\nimport\s+"([^"]+)"'),
-    ("go", "DECLARES", rf"\nfunc\s+({IDENT})"),
+    ("java", "IMPORTS", rf"\nimport{_WS}+({DOTTED})\.{IDENT}{_WS}*;"),
+    ("java", "DECLARES", rf"\n(?:public{_WS}+|final{_WS}+)*class{_WS}+({IDENT})"),
+    ("go", "IMPORTS", rf'\nimport{_WS}+"([^"]+)"'),
+    ("go", "DECLARES", rf"\nfunc{_WS}+({IDENT})"),
     ("go", "CALLS", rf"\n({IDENT})\("),
-    ("sql", "DECLARES", rf"(?i)\nCREATE\s+TABLE\s+({IDENT})"),
-    ("sql", "IMPORTS", rf"(?i)\bFROM\s+({IDENT})"),
+    ("sql", "DECLARES", rf"(?i)\nCREATE{_WS}+TABLE{_WS}+({IDENT})"),
+    ("sql", "IMPORTS", rf"(?i)\bFROM{_WS}+({IDENT})"),
 ]
 
 _LANGS = sorted({lang for lang, _, _ in RULES})

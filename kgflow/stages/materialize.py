@@ -7,12 +7,16 @@ Neo4j-bulk-loader-shaped tables (:ID/:LABEL, :START_ID/:END_ID/:TYPE,
 the column convention the loader notebook renames into,
 neo4j-loading.py:122-137).
 
+Two chained stages: edges are the deduplicated canonicalized triples,
+nodes the distinct endpoints of the stored edges. No intermediate is
+pinned in memory.
+
 Semantics preserved from the reference:
   * MERGE idempotence (neo4j-loading.py:230-234,309-315) →
-    dropDuplicates on [:ID] / [:START_ID,:END_ID,:TYPE] before write,
-    so re-materialization is a no-op.
+    groupBy on (pred, subj, obj) / distinct :ID before write, so
+    re-materialization is a no-op.
   * per-label unique-id constraints (neo4j-constraints.py:69-141) →
-    assert_unique_ids() raises if any (:LABEL, :ID) repeats.
+    assert_unique_ids() raises if any :ID repeats.
   * property bags as JSON strings (graph-transformation.py:79-84) →
     to_json(struct(...)) with key order fixed by construction.
 
@@ -24,7 +28,7 @@ without needing an artificial salt column.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgflow.schemas import PRED_ENDPOINT_LABELS
@@ -51,48 +55,24 @@ def canonicalized_triples(triples: DataFrame, cmap: DataFrame) -> DataFrame:
     return mapped
 
 
-def _endpoint_labels() -> tuple[Column, Column]:
-    """(subject label, object label) of each row's predicate, looked up
-    in PRED_ENDPOINT_LABELS. A function, not a constant: F.create_map
-    needs a live SparkContext."""
-    return tuple(
+def build_edges(triples: DataFrame, cmap: DataFrame, out_partitions: int | None = None) -> DataFrame:
+    """Deduplicated typed edges of the canonicalized triples, evidence
+    count as a property. A node needs a name, so a triple with a NULL
+    endpoint (NULL lang or repo) stays in `triples` but makes no edge."""
+    # endpoint labels of each row's predicate (create_map needs a live
+    # SparkContext, so this cannot be a module constant)
+    subj_label, obj_label = (
         F.create_map(
             *[F.lit(x) for p, ends in PRED_ENDPOINT_LABELS.items() for x in (p, ends[i])]
         )[F.col("pred")]
         for i in (0, 1)
     )
-
-
-def build_nodes(triples_c: DataFrame) -> DataFrame:
-    """Distinct endpoint nodes across all predicates, loader shape."""
-    subj_label, obj_label = _endpoint_labels()
-
-    subj_nodes = triples_c.select(
-        subj_label.alias(":LABEL"), F.col("subj").alias("name")
-    )
-    obj_nodes = triples_c.select(obj_label.alias(":LABEL"), F.col("obj").alias("name"))
-    return (
-        subj_nodes.unionByName(obj_nodes)
-        .dropDuplicates([":LABEL", "name"])
-        .select(
-            F.concat(F.col(":LABEL"), F.lit(":"), F.col("name")).alias(":ID"),
-            ":LABEL",
-            "name",
-            F.to_json(F.struct(F.col("name"))).alias("properties"),
-        )
-    )
-
-
-def build_edges(triples_c: DataFrame) -> DataFrame:
-    """Deduplicated typed edges; evidence count kept as a property."""
-    subj_label, obj_label = _endpoint_labels()
-    # group on the RAW (pred, subj, obj) key and format the loader
-    # columns AFTER the aggregate (round 7, guide §2.3): :TYPE IS pred
-    # and the label prefixes are functions of pred, so the grouping is
-    # bijective with the formatted key while the exchange skips the
-    # prefix bytes on every pre-aggregation row
-    return (
-        triples_c.groupBy("pred", "subj", "obj")
+    # group on the RAW (pred, subj, obj) key, format AFTER the aggregate:
+    # labels are functions of pred, so the exchange skips their bytes
+    edges = (
+        canonicalized_triples(triples, cmap)
+        .dropna(subset=["subj", "obj"])
+        .groupBy("pred", "subj", "obj")
         .agg(F.count(F.lit(1)).alias("evidence"))
         .select(
             F.concat(subj_label, F.lit(":"), F.col("subj")).alias(":START_ID"),
@@ -101,6 +81,27 @@ def build_edges(triples_c: DataFrame) -> DataFrame:
             F.to_json(F.struct(F.col("evidence"))).alias("properties"),
         )
     )
+    if out_partitions:
+        # hash on both endpoints: hot :START_ID keys spread across partitions
+        edges = edges.repartition(out_partitions, ":START_ID", ":END_ID")
+    return edges
+
+
+def build_nodes(edges: DataFrame, out_partitions: int | None = None) -> DataFrame:
+    """Distinct edge endpoints, loader shape. An id is ``label:name`` and
+    no label contains ':', so the split at the first ':' recovers both
+    (a name may contain one: repo ``org:team``, module ``node:fs``)."""
+    label_name = F.split(F.col(":ID"), ":", 2)
+    nodes = (
+        edges.select(F.col(":START_ID").alias(":ID"))
+        .union(edges.select(F.col(":END_ID").alias(":ID")))
+        .distinct()
+        .select(":ID", label_name[0].alias(":LABEL"), label_name[1].alias("name"))
+        .withColumn("properties", F.to_json(F.struct(F.col("name"))))
+    )
+    if out_partitions:
+        nodes = nodes.repartition(out_partitions, ":ID")
+    return nodes
 
 
 def assert_unique_ids(nodes: DataFrame) -> None:
@@ -127,33 +128,10 @@ def assert_edge_endpoints(nodes: DataFrame, edges: DataFrame) -> None:
         raise AssertionError(f"dangling edge endpoints: {[r[0] for r in dangling]}")
 
 
-def materialize(
-    triples: DataFrame, cmap: DataFrame, out_partitions: int | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """triples + canonical map -> (nodes, edges), skew-spread.
-
-    The canonicalized triple stream feeds both outputs; localCheckpoint
-    materializes it once instead of re-scanning + re-joining per output
-    table. (On a real cluster this would be the `canonical_triples`
-    stage table instead of an in-memory checkpoint.)"""
-    # project to the three columns nodes/edges actually consume BEFORE
-    # checkpointing: the eager localCheckpoint materializes deserialized
-    # rows in memory, and src_sha (64-char hex) + repo + lang were ~40%
-    # of that footprint for zero downstream use (guide §2.3 — project
-    # before the materialization boundary). A graph node needs a name:
-    # a NULL endpoint (a NULL lang's WRITTEN_IN object, a NULL repo's
-    # DECLARES subject) would become a node with a NULL :ID, so those
-    # triples stay in the triples table but make no edge
-    tc = (
-        canonicalized_triples(triples, cmap)
-        .select("subj", "pred", "obj")
-        .dropna(subset=["subj", "obj"])
-        .localCheckpoint(eager=True)
-    )
-    nodes = build_nodes(tc)
-    edges = build_edges(tc)
-    if out_partitions:
-        nodes = nodes.repartition(out_partitions, ":ID")
-        # hash on both endpoints: hot :START_ID keys spread across partitions
-        edges = edges.repartition(out_partitions, ":START_ID", ":END_ID")
-    return nodes, edges
+def materialize(triples: DataFrame, cmap: DataFrame,
+                out_partitions: int | None = None) -> tuple[DataFrame, DataFrame]:
+    """Lazy (nodes, edges). Kept only for the benchmark harness
+    (``perfbench/workloads.py``), which calls it; ROADMAP direction 1
+    deletes it. ``run_pipeline`` builds nodes from the stored edges."""
+    edges = build_edges(triples, cmap, out_partitions)
+    return build_nodes(edges, out_partitions), edges

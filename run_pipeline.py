@@ -118,7 +118,7 @@ def main(argv: list[str] | None = None) -> int:
     # the run record gives the whole-run wall, own-tree CPU-seconds,
     # driver-JVM GC ms and JIT compile ms; each stage that ran carries
     # the same four over its own window (a stage's sec is its build plus
-    # its write, and for nodes and edges their constraint check too),
+    # its write, and for nodes the two graph checks too),
     # and a resumed stage carries none. In local[N] mode the driver JVM
     # is the whole runtime, so gc_ms and jit_ms are the run's total GC
     # and compile cost.

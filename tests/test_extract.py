@@ -65,13 +65,21 @@ LINE_BREAK_ROWS = [
     ("lb", "src/imp.js", "c", "javascript", "import {a,\rb} from 'mod_x'\n"),
 ]
 
+# Whitespace is java.util.regex's ASCII \s, [ \t\n\x0B\f\r], in both
+# engines; Python's \s would also match U+00A0 and U+3000.
+WHITESPACE_ROWS = [
+    ("ws", "src/nbsp.py", "c", "python", "import\u00a0os_nbsp\ndef\u00a0f_nbsp():\n"),
+    ("ws", "src/ideo.go", "c", "go", 'import\u3000"m_ideo"\n'),
+    ("ws", "src/ascii.py", "c", "python", "import\x0bos_vt\ndef\tf_tab():\n"),
+]
+
 
 def test_extract_matches_python_re_reference(spark):
     """java.util.regex and Python re agree on every rule: extract() and
     the plain-Python reference emit the same multiset of rows, on the
-    fixture corpus and on LINE_BREAK_ROWS."""
+    fixture corpus, LINE_BREAK_ROWS and WHITESPACE_ROWS."""
     src = fixtures.source_files(spark, N_FILES).unionByName(
-        spark.createDataFrame(LINE_BREAK_ROWS, SOURCE_FILES)
+        spark.createDataFrame(LINE_BREAK_ROWS + WHITESPACE_ROWS, SOURCE_FILES)
     )
     rows = src.collect()
     want = _reference_triples(rows)
@@ -84,9 +92,13 @@ def test_extract_matches_python_re_reference(spark):
     assert any(r.content is None for r in rows)
     # no declaration after a bare \r, U+0085 or U+2028; a JS import
     # whose braces span a \r is still found
-    line_break_objs = {obj for _, pred, obj, _, repo, _ in got
-                       if repo == "lb" and pred != "WRITTEN_IN"}
-    assert line_break_objs == {"nl_ok", "NlOk", "nlOk", "os", "crlf_ok", "mod_x"}
+    objs = {repo: set() for repo in ("lb", "ws")}
+    for _, pred, obj, _, repo, _ in got:
+        if repo in objs and pred != "WRITTEN_IN":
+            objs[repo].add(obj)
+    assert objs["lb"] == {"nl_ok", "NlOk", "nlOk", "os", "crlf_ok", "mod_x"}
+    # U+00A0 and U+3000 separate nothing; \x0B and \t do
+    assert objs["ws"] == {"os_vt", "f_tab"}
 
 
 def test_content_sha_preserved_through_extraction(spark):

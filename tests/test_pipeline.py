@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from kgflow import fixtures, lineage as lin, pipeline
 from kgflow.pipeline import STAGES, run_pipeline
-from kgflow.schemas import SOURCE_FILES
+from kgflow.schemas import PRED_ENDPOINT_LABELS, SOURCE_FILES
 
 N_FILES = 150
 FP = f"fixture-n{N_FILES}"
@@ -66,8 +66,9 @@ def test_end_to_end_triples_match_golden(spark, base_run):
 
 @pytest.mark.parametrize("wiped", ["nodes", "edges"])
 def test_resume_skips_completed_stages(spark, base_run, run_copy, wiped):
-    """A rerun skips every stage. After one output stage is wiped only
-    it recomputes, whichever of the two materialize() builds for, and
+    """A rerun skips every stage. After one graph stage is wiped only
+    it recomputes (fingerprints chain on parameters, not on table
+    contents, so a recomputed edges stage leaves nodes complete), and
     its table equals the base run's."""
     base_dir, _ = base_run
     second = _run(spark, run_copy)
@@ -82,12 +83,13 @@ def test_resume_skips_completed_stages(spark, base_run, run_copy, wiped):
 
 
 @pytest.mark.parametrize(
-    "wiped, check", [("nodes", "assert_unique_ids"), ("edges", "assert_edge_endpoints")]
+    "wiped, check", [("nodes", "assert_unique_ids"), ("nodes", "assert_edge_endpoints")]
 )
 def test_failed_check_leaves_stage_unpublished(spark, base_run, run_copy, monkeypatch,
                                                wiped, check):
     """A stage whose constraint check raises publishes no manifest, so
-    the next run recomputes that stage and only that stage."""
+    the next run recomputes that stage and only that stage. Both graph
+    checks sit on nodes: either one failing leaves it unpublished."""
     _, report = base_run
     shutil.rmtree(os.path.join(run_copy, wiped))
 
@@ -126,10 +128,14 @@ def test_checks_run_once_when_written_and_never_on_resume(spark, tmp_path, monke
 def test_null_lang_or_repo_makes_no_nameless_node(spark, tmp_path):
     """A NULL lang (the WRITTEN_IN object) or a NULL repo (the DECLARES
     subject) leaves its triple in `triples` but makes no node or edge;
-    the run completes and the files' other triples still become edges."""
+    the run completes and the files' other triples still become edges.
+    A name may contain ':' (repo `org:team`, module `node:fs`): its node
+    still reads (label, name)."""
     odd = spark.createDataFrame(
         [("repo_x", "src/nolang.py", "c1", None, "import os\ndef f_nolang():\n"),
-         (None, "src/norepo.py", "c2", "python", "import sys\ndef f_norepo():\n")],
+         (None, "src/norepo.py", "c2", "python", "import sys\ndef f_norepo():\n"),
+         ("org:team", "src/app.js", "c3", "javascript",
+          "const fs = require('node:fs')\nfunction f_colon() {}\n")],
         SOURCE_FILES,
     )
     run_dir = str(tmp_path / "run")
@@ -149,6 +155,12 @@ def test_null_lang_or_repo_makes_no_nameless_node(spark, tmp_path):
         .select(":TYPE", ":END_ID").collect()
     }
     assert norepo == {("WRITTEN_IN", "Language:python"), ("IMPORTS", "Module:sys")}
+    colon = {
+        r[":ID"]: (r[":LABEL"], r["name"])
+        for r in nodes.where(F.col(":ID").isin("Repo:org:team", "Module:node:fs")).collect()
+    }
+    assert colon == {"Repo:org:team": ("Repo", "org:team"),
+                     "Module:node:fs": ("Module", "node:fs")}
 
 
 def test_each_step_that_ran_has_one_usage_record(spark, base_run, run_copy):
@@ -282,6 +294,33 @@ def test_materialized_graph_constraints(spark, base_run):
     assert {"File", "Language", "Repo", "Symbol", "Module"} <= labels
     types = {r[0] for r in edges.select(":TYPE").distinct().collect()}
     assert {"WRITTEN_IN", "DECLARES", "IMPORTS"} <= types
+
+
+def test_nodes_match_python_reference_over_triples(spark, base_run):
+    """The stored nodes (built from the stored edges) equal a plain-Python
+    reference built from the stored triples and canonical map instead:
+    each triple with both endpoints names a node per endpoint, labelled
+    by PRED_ENDPOINT_LABELS, a Symbol object under its canonical name."""
+    run_dir, _ = base_run
+    canon = {r.member: r.canonical
+             for r in lin.read_stage(spark, run_dir, "canonical_map").collect()}
+    want = set()
+    renamed = 0
+    for r in lin.read_stage(spark, run_dir, "triples").select("subj", "pred", "obj").collect():
+        if r.subj is None or r.obj is None:
+            continue
+        subj_label, obj_label = PRED_ENDPOINT_LABELS[r.pred]
+        obj = canon.get(r.obj, r.obj) if obj_label == "Symbol" else r.obj
+        renamed += obj != r.obj
+        want |= {(subj_label, r.subj), (obj_label, obj)}
+    assert renamed, "no symbol object was canonicalized — test vacuous"
+    got = Counter()
+    for r in lin.read_stage(spark, run_dir, "nodes").collect():
+        assert r[":ID"] == f"{r[':LABEL']}:{r['name']}"
+        assert json.loads(r["properties"]) == {"name": r["name"]}
+        got[(r[":LABEL"], r["name"])] += 1
+    assert set(got) == want
+    assert set(got.values()) == {1}
 
 
 def test_alias_variants_share_canonical_node(spark, base_run):
