@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from kgflow.analytics.tables import load
+from kgflow.functions import drop_hot, group_pairs
 
 SQL: dict[str, str] = {}
 
@@ -366,30 +367,20 @@ WHERE c_custkey NOT IN (
 """
 
 
-# unordered in-group pair generator shared with kgflow.ops.dedup —
-# see kgflow.functions.pair_structs for the self-join-replacement
-# rationale (guide §2.4)
-from kgflow.functions import pair_structs as _pair_structs  # noqa: E402
-
-
 def q_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 self-join on shared key + P7 inequality — the co-purchase
     pair counting of product-recommendations.py:59-67, keyed on orders
     instead of customers. The skew-safe form: distinct parts per order
     (collect_set dedups in the same exchange the old distinct paid),
-    each order contributing each pair once. Round-7 shape: in-group
-    pair expansion (_pair_structs) instead of the self-join — one
-    exchange on l_orderkey replaces two distinct-shuffles plus the join,
-    with identical output by construction."""
+    each order contributing each pair once. In-group pair expansion
+    (kgflow.functions.group_pairs) instead of the self-join, with
+    identical output by construction."""
     li = load(spark, sf_dir, "lineitem")
-    per_order = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("parts")
-    )
-    pairs = per_order.select(F.explode(_pair_structs(F.col("parts"))).alias("p"))
+    pairs = group_pairs(li, ["l_orderkey"], "l_partkey")
     return (
         pairs.groupBy(
-            F.col("p.a").alias("part_a"),
-            F.col("p.b").alias("part_b"),
+            F.col("a").alias("part_a"),
+            F.col("b").alias("part_b"),
         )
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .where(F.col("n_orders") >= 2)
@@ -640,10 +631,10 @@ MIN_SHARED = 2
 # similarity self-join: a part with B buyers contributes B^2 pair rows,
 # so one viral part at 10^5 buyers would emit 10^10 rows before the
 # groupBy — while carrying almost no signal (everyone owns it). This is
-# the co-occurrence stop-word cap, the same skew guard as BUCKET_CAP in
-# kgflow/stages/link.py. 256 is ~5x the hottest part at sf0.1, so test
-# results are unchanged; at 100x the data the cap is what keeps the
-# stage linear.
+# the co-occurrence stop-word cap, applied by the same skew guard
+# (kgflow.functions.drop_hot) as the LSH BUCKET_CAPs. 256 is ~5x the
+# hottest part at sf0.1, so test results are unchanged; at 100x the
+# data the cap is what keeps the stage linear.
 PART_BUYER_CAP = 256
 
 
@@ -675,34 +666,16 @@ def q_copurchase_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
         # callers can release_caches() after their terminal action.
     )
     purchases = track_persist(purchases)
-    # Round-7 similarity shape (guide §2.3/§2.4): the
-    # viral parts are dropped FIRST with the count-based hot list +
-    # broadcast anti-join (counting is O(1) memory per group — a
-    # collect_set-then-size() filter would materialize a 10^5-buyer
-    # part's full member array in one aggregation buffer before
-    # discarding it), then one groupBy(part) collects the surviving
-    # parts' sorted buyer sets — every collected array <= PART_BUYER_CAP
-    # by construction — and in-group pair expansion replaces the
-    # part-keyed self-join. The pair exchange then moves UNORDERED
-    # pairs — half the rows of the ordered (cust != other) join output,
-    # the dominant shuffle of this query (~17M ordered pair rows at
-    # sf0.1) — and both orientations are re-emitted only for the
-    # MIN_SHARED survivors. Same sim table by symmetry:
-    # shared(a,b) = shared(b,a).
-    hot = (
-        purchases.groupBy("part")
-        .agg(F.count(F.lit(1)).alias("n_buyers"))
-        .where(F.col("n_buyers") > PART_BUYER_CAP)
-        .select("part")
-    )
-    grouped = (
-        purchases.join(F.broadcast(hot), "part", "left_anti")
-        .groupBy("part")
-        .agg(F.sort_array(F.collect_set("cust")).alias("buyers"))
-    )
-    upairs = grouped.select(F.explode(_pair_structs(F.col("buyers"))).alias("p"))
+    # Viral parts are dropped first (kgflow.functions.drop_hot), then
+    # in-group pair expansion (group_pairs) replaces the part-keyed
+    # self-join. The pair exchange moves UNORDERED pairs — half the
+    # rows of the ordered (cust != other) join output, the dominant
+    # shuffle of this query (~17M ordered pair rows at sf0.1) — and
+    # both orientations are re-emitted only for the MIN_SHARED
+    # survivors. Same sim table by symmetry: shared(a,b) = shared(b,a).
+    upairs = group_pairs(drop_hot(purchases, ["part"], PART_BUYER_CAP), ["part"], "cust")
     shared_u = (
-        upairs.groupBy(F.col("p.a").alias("cust"), F.col("p.b").alias("other"))
+        upairs.groupBy(F.col("a").alias("cust"), F.col("b").alias("other"))
         .agg(F.count(F.lit(1)).alias("shared"))
         .where(F.col("shared") >= MIN_SHARED)
     )
@@ -1090,19 +1063,15 @@ def q_combined_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # stream 3 — co-purchase partners: each owned part expands to its
-    # PARTNER_TOP strongest same-order partners only. Round-7 shape:
-    # in-group pair expansion (_pair_structs) over the per-order
-    # distinct part sets — collect_set dedups in the same exchange the
-    # old `distinct` paid, the self-join disappears, and the pair
-    # exchange moves unordered pairs (half the ordered rows); both
-    # orientations are re-emitted afterwards, which is exactly the old
-    # (a.l_partkey != b.l_partkey) output by symmetry.
-    per_order = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("parts")
-    )
+    # PARTNER_TOP strongest same-order partners only. In-group pair
+    # expansion (kgflow.functions.group_pairs) over the per-order
+    # distinct part sets: the pair exchange moves unordered pairs (half
+    # the ordered rows); both orientations are re-emitted afterwards,
+    # which is exactly the self-join's (a.l_partkey != b.l_partkey)
+    # output by symmetry.
     pair_u = (
-        per_order.select(F.explode(_pair_structs(F.col("parts"))).alias("pr"))
-        .groupBy(F.col("pr.a").alias("pa"), F.col("pr.b").alias("pb"))
+        group_pairs(li, ["l_orderkey"], "l_partkey")
+        .groupBy(F.col("a").alias("pa"), F.col("b").alias("pb"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
     pair_counts = pair_u.unionByName(

@@ -8,9 +8,10 @@ hash — the scalable shape). Near-dup comes in two flavors:
     quadratic term; at 100 TB you'd block on minhash bands instead);
   * ``minhash_lsh_pairs`` — the scale path: banded minhash over token
     3-gram shingles, candidate pairs only within (capped) LSH buckets,
-    similarity verified from signature agreement. Same algorithm
-    family as the entity-linking stage (kgflow/stages/link.py) but
-    over documents.
+    similarity verified from signature agreement. It runs on the
+    blocking kernel in kgflow.functions (minhash, lsh_bands, drop_hot,
+    group_pairs) that the entity-linking stage (kgflow/stages/link.py)
+    shares, over documents instead of symbols.
   * ``simhash_fingerprints`` / ``simhash_pairs`` — 64-bit simhash via
     bit-majority of token xxhash64s; near-dups collide on all but a few
     bits and are found by banding the fingerprint into 4 x 16-bit keys
@@ -26,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgflow.caching import track_persist
+from kgflow.functions import drop_hot, group_pairs, lsh_bands, minhash
 
 SHINGLE_N = 3
 NUM_HASHES = 32
@@ -154,7 +156,7 @@ def minhash_lsh_pairs(
         (MEMORY_AND_DISK via kgflow.caching.track_persist — callers
         release with release_caches()): ~300 B/doc, i.e. ~300 GB at
         10^9 docs spread over the cluster, vs re-running the shingle +
-        32-hash transform — the dominant CPU — three times.
+        32-hash aggregate — the dominant CPU — three times.
 
     hash_family picks the seeded hash: ``xxhash64`` (JVM-native longs,
     the 100 TB fast path) or ``md5`` (hex strings, lexicographic min —
@@ -163,29 +165,12 @@ def minhash_lsh_pairs(
 
     Exact-Jaccard verification stays available via token_jaccard_pairs
     (the oracle-checked baseline)."""
-    # Round-7 signature build (guide §1.2 per-task work + §4.1 —
-    # measured 2.88 -> 0.81 s at sf0.1 with identical signatures):
-    #
-    #  * tokens are MATERIALIZED as a column before the shingle
-    #    transform: higher-order functions are interpreted and
-    #    re-evaluate inline subexpressions per ELEMENT, so an inline
-    #    split would run once per shingle slot; a bound column
-    #    reference is a row-field read. (CollapseProject keeps the
-    #    projection split: the alias is referenced more than once and
-    #    split() is not cheap.)
-    #  * the NUM_HASHES min-hashes run as explode + one hash aggregate
-    #    with NUM_HASHES min()s — whole-stage codegen end to end —
-    #    instead of NUM_HASHES interpreted transform+array_min passes
-    #    over each shingle array. min over the exploded multiset equals
-    #    array_min over the distinct array; partial aggregation
-    #    collapses each doc's shingles map-side, so the exchange moves
-    #    ~one narrow row per document.
-    #  * no size(sh) > 0 guard: the shingle array is non-empty by
-    #    construction (sequence(1, greatest(len-2, 1)) yields >= 1
-    #    element even for null text), and the old guard's pushed-down
-    #    copy re-evaluated the whole shingle expression per doc. The
-    #    md5 oracle twin keeps its equally-vacuous `len(sh) > 0`
-    #    (frozen SQL text); row sets match.
+    # tokens are MATERIALIZED before the shingle transform (see
+    # functions.minhash): an inline split would run once per shingle
+    # slot. The shingle array is non-empty by construction
+    # (sequence(1, greatest(len-2, 1)) yields >= 1 element even for
+    # null text), so no size(sh) > 0 guard; the md5 oracle twin keeps
+    # its equally-vacuous `len(sh) > 0` (frozen SQL text).
     toked = docs.select("doc_id", _tokens(F.col("text")).alias("toks"))
     count = F.greatest(F.size("toks") - (SHINGLE_N - 1), F.lit(1))
     sh = toked.select(
@@ -199,78 +184,24 @@ def minhash_lsh_pairs(
     )
 
     if hash_family == "xxhash64":
-        def hash_j(j: int):
-            return F.xxhash64(F.col("s"), F.lit(j))
-
-        def band_key(b: int, rows: int):
-            return F.xxhash64(*[F.col("sig")[b * rows + r] for r in range(rows)])
+        hashes = [lambda s, j=j: F.xxhash64(s, F.lit(j)) for j in range(NUM_HASHES)]
+        band_key = lambda slots: F.xxhash64(*slots)  # noqa: E731
     elif hash_family == "md5":
-        def hash_j(j: int):
-            return F.md5(F.concat(F.col("s"), F.lit(f":{j}")))
-
-        def band_key(b: int, rows: int):
-            return F.md5(
-                F.concat_ws("|", *[F.col("sig")[b * rows + r] for r in range(rows)])
-            )
+        hashes = [lambda s, j=j: F.md5(F.concat(s, F.lit(f":{j}"))) for j in range(NUM_HASHES)]
+        band_key = lambda slots: F.md5(F.concat_ws("|", *slots))  # noqa: E731
     else:
         raise ValueError(f"unknown hash_family: {hash_family!r}")
 
     # referenced three times below (banding + both verify sides) — see
     # docstring for the persist-vs-recompute sizing at 10^9 docs
-    sig = track_persist(
-        sh.select("doc_id", F.explode("sh").alias("s"))
-        .groupBy("doc_id")
-        .agg(*[F.min(hash_j(j)).alias(f"_h{j}") for j in range(NUM_HASHES)])
-        .select(
-            "doc_id",
-            F.array(*[F.col(f"_h{j}") for j in range(NUM_HASHES)]).alias("sig"),
-        )
-    )
-    rows = NUM_HASHES // BANDS
-    # the banding/bucketing machinery rides NARROW (doc_id, band, key)
-    # rows — carrying the 32-slot signature through the explode would
-    # shuffle BANDS copies of it per document; signatures are joined
-    # back exactly once per side, only for surviving candidate pairs
-    banded = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        band_key(b, rows).alias("key"),
-                    )
-                    for b in range(BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.key")
-    # Round-7 candidate generation (guide §2.4): degenerate buckets are
-    # dropped FIRST via the count-based size aggregation + broadcast
-    # anti-join (counting is O(1) memory per group — collecting a
-    # 10^7-member spam bucket just to discard it on size() would blow
-    # one aggregation buffer), then ONE groupBy(band, key) collects the
-    # surviving buckets' sorted doc sets — every array <= BUCKET_CAP by
-    # construction — and in-bucket pair expansion replaces the
-    # (band, key) self-join. Same (doc_a < doc_b) pairs; one
-    # (doc_id, band) row per doc per band means bucket members are
-    # already distinct, so count(*) == set size.
-    from kgflow.functions import pair_structs
-
-    over_cap = (
-        banded.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > BUCKET_CAP)
-        .select("band", "key")
-    )
-    buckets = (
-        banded.join(F.broadcast(over_cap), ["band", "key"], "left_anti")
-        .groupBy("band", "key")
-        .agg(F.sort_array(F.collect_set("doc_id")).alias("ids"))
-    )
+    sig = track_persist(minhash(sh, ["doc_id"], "sh", hashes))
+    # narrow (doc_id, band, key) rows: signatures are joined back once
+    # per side, only for surviving candidate pairs. One row per doc per
+    # band, so bucket members are already distinct.
+    banded = lsh_bands(sig, BANDS, NUM_HASHES // BANDS, band_key)
     pairs = (
-        buckets.select(F.explode(pair_structs(F.col("ids"))).alias("p"))
-        .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
+        group_pairs(drop_hot(banded, ["band", "key"], BUCKET_CAP), ["band", "key"], "doc_id")
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))

@@ -9,10 +9,11 @@ idioms the north_star names:
      symbol dictionary is bounded (distinct symbols, not files), so it
      broadcasts; the probe side never shuffles.
   2. **MinHash/LSH banding** — fuzzy alias candidates without a cross
-     join. Character-shingle minhash signatures are computed with pure
-     JVM expressions (sequence/transform/xxhash64/array_min — no
-     Python), band keys exploded, and the self-join runs *within LSH
-     buckets only*. Hot buckets are frequency-capped (skew guard), and
+     join, over the blocking kernel in kgflow.functions shared with
+     ops/dedup.py: character-shingle minhash signatures (`minhash`,
+     one codegen aggregate — no Python), band keys exploded
+     (`lsh_bands`), and the self-join runs *within LSH buckets only*.
+     Hot buckets are frequency-capped (`drop_hot`, the skew guard), and
      candidates are verified with exact Jaccard before becoming alias
      edges.
 
@@ -25,11 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgflow.functions import drop_hot, lsh_bands, minhash
+
 SHINGLE_LEN = 3
 NUM_HASHES = 24
 BANDS = 8  # rows per band = NUM_HASHES // BANDS = 3
 JACCARD_THRESHOLD = 0.55
-BUCKET_CAP = 64  # larger LSH buckets are skew-dropped; nothing counts the drops yet
+BUCKET_CAP = 64  # larger LSH buckets are skew-dropped (functions.drop_hot); nothing counts the drops yet
 
 
 def _norm(col: F.Column) -> F.Column:
@@ -82,84 +85,37 @@ def _shingles(padded: F.Column) -> F.Column:
     )
 
 
-def minhash_signature_from_shingles(sh_col: F.Column) -> F.Column:
-    """array<long> of NUM_HASHES min-hashes over a MATERIALIZED shingle
-    column. Pass a bound column, not an inline _shingles(...) expression:
-    each of the NUM_HASHES transforms evaluates its array argument once
-    per row, so an inline shingle expression would be re-computed
-    NUM_HASHES times per row (interpreted HOFs have no CSE — measured
-    as the dominant cost of the alias_edges stage at 500k files)."""
-    def hash_j(j: int):
-        # single-arg lambda: with two args F.transform passes the array
-        # index as the second parameter, silently breaking the seed
-        return lambda s: F.xxhash64(s, F.lit(j))
-
-    return F.array(
-        *[F.array_min(F.transform(sh_col, hash_j(j))) for j in range(NUM_HASHES)]
-    )
-
-
 def lsh_alias_edges(dictionary: DataFrame) -> DataFrame:
-    """Fuzzy alias candidates via banded minhash, verified by exact
-    Jaccard over shingle sets.
+    """Fuzzy alias candidates via banded minhash (kgflow.functions),
+    verified by exact Jaccard over shingle sets.
 
-    Plan shape: one narrow stage computes signatures + band keys,
-    explode → shuffle on (band, key) → in-bucket self-join → exact
-    verify. No pair of symbols is ever compared unless they collide in
-    some band, and buckets above BUCKET_CAP are dropped (a hot bucket
-    means a degenerate key — e.g. thousands of one-char symbols — whose
-    pairs would be quadratic; precision is protected by the verify step
-    and recall by the remaining bands).
+    Plan shape: shingles -> minhash aggregate -> band explode ->
+    (band, key) self-join -> exact verify. No pair of symbols is ever
+    compared unless they collide in some band, and buckets above
+    BUCKET_CAP are dropped (drop_hot: a hot bucket means a degenerate
+    key — e.g. thousands of one-char symbols — whose pairs would be
+    quadratic; precision is protected by the verify step and recall by
+    the remaining bands).
     """
-    # Bind the padded string, then the shingle array, then compute the
-    # signature from the bound column, so each piece is computed once
-    # per row: interpreted HOFs re-evaluate inline subexpressions per
-    # element, and the signature reads the shingles NUM_HASHES times
-    # (inline, this cost 25.4 s of build wall at 500k files; bound, ~3 s).
-    # The dictionary's norm column IS _norm(symbol).
+    # Bind the padded string, then the shingle array, so each piece is
+    # computed once per row: interpreted HOFs re-evaluate inline
+    # subexpressions per element. The dictionary's norm column IS
+    # _norm(symbol); one row per symbol, so the minhash groups are rows.
     padded = dictionary.select(
         "symbol",
         "norm",
         F.concat(F.lit("^"), F.col("norm"), F.lit("$")).alias("p"),
     )
     shingled = padded.select("symbol", "norm", _shingles(F.col("p")).alias("sh"))
-    with_sig = shingled.select(
-        "symbol",
-        "norm",
-        "sh",
-        minhash_signature_from_shingles(F.col("sh")).alias("sig"),
-    )
-    rows_per_band = NUM_HASHES // BANDS
-    banded = with_sig.select(
-        "symbol",
-        "norm",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-                        ).alias("key"),
-                    )
-                    for b in range(BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("symbol", "norm", "sh", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    hashes = [lambda s, j=j: F.xxhash64(s, F.lit(j)) for j in range(NUM_HASHES)]
+    sig = minhash(shingled, ["symbol", "norm", "sh"], "sh", hashes)
+    banded = lsh_bands(sig, BANDS, NUM_HASHES // BANDS, lambda slots: F.xxhash64(*slots))
 
-    # The banded table feeds three plan branches (bucket sizing + both
+    # The banded table feeds three plan branches (the hot list + both
     # self-join sides); materialize it once — it is O(vocab x BANDS),
     # bounded, and recomputing it re-runs the whole signature tree.
     banded = banded.localCheckpoint(eager=True)
-
-    # Skew guard: cap bucket size before the in-bucket self-join.
-    bucket_sizes = banded.groupBy("band", "key").agg(F.count(F.lit(1)).alias("bucket_n"))
-    capped = banded.join(
-        bucket_sizes.where(F.col("bucket_n") <= BUCKET_CAP).select("band", "key"),
-        ["band", "key"],
-    )
+    capped = drop_hot(banded, ["band", "key"], BUCKET_CAP)
 
     left = capped.select("band", "key", F.col("symbol").alias("src"), F.col("sh").alias("sh_a"), F.col("norm").alias("norm_a"))
     right = capped.select("band", "key", F.col("symbol").alias("dst"), F.col("sh").alias("sh_b"), F.col("norm").alias("norm_b"))
@@ -180,9 +136,8 @@ def link(triples: DataFrame, fuzzy: bool = True) -> tuple[DataFrame, DataFrame]:
 
     The dictionary is materialized once (localCheckpoint): it is
     O(|vocabulary|) — bounded regardless of corpus size — and feeds
-    many plan branches (hub grouping, hub join, LSH signatures, bucket
-    sizing, both self-join sides); without the checkpoint each branch
-    re-aggregates the full triple stream."""
+    many plan branches (hub grouping, hub join, LSH signatures); without
+    the checkpoint each branch re-aggregates the full triple stream."""
     dictionary = symbol_dictionary(triples).localCheckpoint(eager=True)
     edges = norm_alias_edges(dictionary)
     if fuzzy:

@@ -35,12 +35,15 @@ from kgflow.schemas import PRED_ENDPOINT_LABELS
 
 
 def canonicalized_triples(triples: DataFrame, cmap: DataFrame) -> DataFrame:
-    """Rewrite symbol objects through the canonical map (broadcast join —
-    the map is O(|alias vocabulary|), tiny next to the triple stream)."""
+    """Rewrite symbol objects through the canonical map. The map is
+    O(|alias vocabulary|), which has no bound as the corpus grows, so
+    the join carries no broadcast hint: the planner broadcasts it while
+    its size is under spark.sql.autoBroadcastJoinThreshold and
+    shuffles it above."""
     symbol_preds = [p for p, (_, obj_label) in PRED_ENDPOINT_LABELS.items() if obj_label == "Symbol"]
     mapped = (
         triples.join(
-            F.broadcast(cmap.withColumnRenamed("member", "obj")),
+            cmap.withColumnRenamed("member", "obj"),
             on="obj",
             how="left",
         )

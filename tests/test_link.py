@@ -1,14 +1,18 @@
-"""Entity-linking tests: normalization aliases, minhash determinism, LSH recall."""
+"""Entity-linking tests: normalization aliases, minhash determinism, LSH
+recall and the bucket cap."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from kgflow.functions import minhash
 from kgflow.stages.link import (
+    BUCKET_CAP,
+    NUM_HASHES,
     _shingles,
     link,
     lsh_alias_edges,
-    minhash_signature_from_shingles,
     norm_alias_edges,
     symbol_dictionary,
 )
@@ -36,14 +40,39 @@ def test_norm_aliases_link_case_and_underscore_variants(spark):
 
 
 def test_minhash_signature_deterministic_and_partition_invariant(spark):
-    def sig(df):
-        sh = df.select(_shingles(F.col("s")).alias("sh"))
-        return sh.select(minhash_signature_from_shingles(F.col("sh")).alias("sig")).collect()[0].sig
+    """functions.minhash (explode + one aggregate of NUM_HASHES mins)
+    equals the per-slot array_min(transform(...)) form on ASCII,
+    unicode, one-character and repeated-shingle symbols, whatever the
+    partitioning."""
+    symbols = ["^alpha_beta$", "^größe_straße$", "^数据_加载$", "x", "^aaaaaaaa$", "^abab_abab$"]
 
-    sig1 = sig(spark.createDataFrame([("^alpha_beta$",)], "s string").repartition(1))
-    sig4 = sig(spark.createDataFrame([("^alpha_beta$",)], "s string").repartition(4))
-    assert sig1 == sig4
-    assert len(sig1) == 24
+    def hash_j(j: int):
+        # single-arg lambda: with two args F.transform passes the array
+        # index as the second parameter
+        return lambda s: F.xxhash64(s, F.lit(j))
+
+    def sigs(n_partitions: int):
+        shingled = (
+            spark.createDataFrame([(s,) for s in symbols], "symbol string")
+            .repartition(n_partitions)
+            .select("symbol", _shingles(F.col("symbol")).alias("sh"))
+        )
+        reference = shingled.select(
+            "symbol",
+            F.array(*[F.array_min(F.transform("sh", hash_j(j))) for j in range(NUM_HASHES)]).alias("sig"),
+        )
+        hashes = [lambda s, j=j: F.xxhash64(s, F.lit(j)) for j in range(NUM_HASHES)]
+        got = minhash(shingled, ["symbol"], "sh", hashes)
+        return (
+            {r.symbol: r.sig for r in got.collect()},
+            {r.symbol: r.sig for r in reference.collect()},
+        )
+
+    sig1, ref1 = sigs(1)
+    sig4, ref4 = sigs(4)
+    assert sig1 == ref1 == sig4 == ref4
+    assert set(sig1) == set(symbols)
+    assert all(len(sig) == NUM_HASHES for sig in sig1.values())
 
 
 def test_lsh_finds_near_duplicate_symbols(spark):
@@ -75,3 +104,33 @@ def test_link_end_to_end_dedupes_edges(spark):
     assert len(pairs) >= 4
     lsh = {(r.src, r.dst) for r in lsh_alias_edges(symbol_dictionary(triples)).collect()}
     assert {p for p in lsh if "configuration_loadder" in p}  # the LSH rule fired
+
+
+def _case_variants(word: str, k: int) -> list[str]:
+    """k distinct spellings of `word` that differ only in letter case
+    (so they share one norm): variant n upper-cases the letters at the
+    set bits of n."""
+    letters = [i for i, c in enumerate(word) if c.isalpha()]
+    out = []
+    for n in range(k):
+        chars = list(word)
+        for bit, pos in enumerate(letters):
+            if n >> bit & 1:
+                chars[pos] = chars[pos].upper()
+        out.append("".join(chars))
+    return out
+
+
+@pytest.mark.parametrize("k, linked", [(BUCKET_CAP - 1, True), (BUCKET_CAP, False)])
+def test_lsh_bucket_cap_boundary(spark, k, linked):
+    """A bucket of exactly BUCKET_CAP spellings is paired, one more is
+    dropped. k case variants of configuration_loader have one norm, so
+    one signature; every bucket they share with configuration_loadder
+    holds k + 1 spellings."""
+    variants = _case_variants("configuration_loader", k)
+    assert len(set(variants)) == k
+    d = _dict(spark, variants + ["configuration_loadder"])
+    crossing = [
+        r for r in lsh_alias_edges(d).collect() if "configuration_loadder" in (r.src, r.dst)
+    ]
+    assert bool(crossing) == linked

@@ -396,3 +396,31 @@ def test_materialize_spreads_hot_node_across_partitions(spark):
     assert max(sizes) <= 2 * mean, (
         f"straggler partition: max {max(sizes)} vs mean {mean:.0f} ({sizes})"
     )
+
+
+def test_edges_map_join_is_not_forced_to_broadcast(spark):
+    """The canonical map grows with the aliased vocabulary, so
+    build_edges leaves the join strategy to the planner: with both
+    broadcast thresholds off, its executed plan has no
+    BroadcastHashJoin."""
+    from kgflow.stages.materialize import build_edges
+
+    triples = spark.createDataFrame(
+        [("repo:r", "DECLARES", "parseConfig", "sha", "repo:r", "py"),
+         ("repo:r", "DECLARES", "parse_config", "sha", "repo:r", "py")],
+        "subj string, pred string, obj string, src_sha string, repo string, lang string",
+    )
+    cmap = spark.createDataFrame([("parseConfig", "parse_config")], "member string, canonical string")
+    keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "-1")
+    try:
+        edges = build_edges(triples, cmap, out_partitions=2)
+        assert len(edges.collect()) == 1
+        plan = edges._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in saved.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    assert "Join" in plan, plan
+    assert "BroadcastHashJoin" not in plan, plan
