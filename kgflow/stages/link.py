@@ -13,12 +13,13 @@ idioms the north_star names:
      ops/dedup.py: character-shingle minhash signatures (`minhash`,
      one codegen aggregate — no Python), band keys exploded
      (`lsh_bands`), and the self-join runs *within LSH buckets only*.
-     Hot buckets are frequency-capped (`drop_hot`, the skew guard), and
+     Buckets over a row cap are dropped (`drop_hot`, the skew guard), and
      candidates are verified with exact Jaccard before becoming alias
      edges.
 
-Output: (a) the symbol dictionary with normalized keys, (b) undirected
-alias edges (sym_a, sym_b) feeding connected-components.
+Output: (a) the symbol dictionary, one row per distinct declared symbol
+with its normalized key, (b) undirected alias edges (sym_a, sym_b)
+feeding connected-components.
 """
 
 from __future__ import annotations
@@ -43,15 +44,15 @@ def _norm(col: F.Column) -> F.Column:
 
 
 def symbol_dictionary(triples: DataFrame) -> DataFrame:
-    """Distinct declared symbols with normalized key + frequency.
+    """Distinct declared symbols, each with its normalized key.
 
-    One shuffle (the groupBy); output is O(|vocabulary|), which is what
+    One shuffle (the distinct); output is O(|vocabulary|), which is what
     makes the downstream broadcast join legal at 100 TB input.
     """
     return (
         triples.where(F.col("pred") == "DECLARES")
-        .groupBy(F.col("obj").alias("symbol"))
-        .agg(F.count(F.lit(1)).alias("freq"))
+        .select(F.col("obj").alias("symbol"))
+        .distinct()
         .withColumn("norm", _norm(F.col("symbol")))
     )
 

@@ -49,13 +49,28 @@ def incremental_extract(
     the budget is admitted alone, so a big file never stalls the stream.
     A restart redoes at most the one uncommitted batch: one budget of
     input, or one oversized file.
+
+    Each batch also runs as one wave of tasks. Split planning is per
+    file: it pads every file by ``spark.sql.files.openCostInBytes``
+    (1 MB in ``session.get_spark``), so a 16 MB split holds only about
+    16 small files, however few bytes they carry. A backlog of 308
+    files of ~45 KB (14 MB) would plan as 20 tasks, five waves on 4 cores,
+    each paying task deserialization and its own sink file. The stream
+    is therefore coalesced to ``defaultParallelism`` partitions: a batch,
+    already capped at one wave of bytes, runs as one wave of tasks and
+    writes at most ``defaultParallelism`` sink files. The one trade is a
+    file over the budget, admitted alone: it runs as
+    ``defaultParallelism`` larger tasks, not one task per 16 MB split.
+    The session's split settings stay as they are, because they also
+    plan every batch read in the session.
     """
-    budget = (spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-              * spark.sparkContext.defaultParallelism)
+    par = spark.sparkContext.defaultParallelism
+    budget = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes() * par
     stream = (
         spark.readStream.schema(SOURCE_FILES)
         .option("maxBytesPerTrigger", budget)
         .parquet(input_dir)
+        .coalesce(par)
     )
     writer = (
         extract(ingest(stream)).writeStream.format("parquet")

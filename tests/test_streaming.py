@@ -113,6 +113,34 @@ def test_byte_budget_bounds_micro_batches(spark, tmp_path):
     assert drain("default") == 1
 
 
+def test_small_file_backlog_drains_in_one_wave(spark, tmp_path):
+    """A backlog of many small files fits one byte budget, and the batch
+    runs as one wave of tasks: split planning pads each file by
+    openCostInBytes, so without the coalesce 200 one-row files plan as
+    about 13 tasks and sink files at local[4]. The batch writes at most
+    defaultParallelism sink files and equals batch extraction."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    inp, out, ckpt = (tmp_path / d for d in ("corpus", "out", "ckpt"))
+    inp.mkdir()
+    cols = ("repo", "path", "commit", "lang", "content")
+    # explicit types: an all-NULL content column would otherwise be
+    # written as parquet's null type (INT32), not the source's string
+    schema = pa.schema([(c, pa.string()) for c in cols])
+    n_files = 200
+    for i in range(n_files):
+        r = fixtures._file_record(i, n_files)
+        pq.write_table(pa.Table.from_pylist([{c: r[c] for c in cols}], schema),
+                       inp / f"part-{i:04d}.parquet")
+    q = incremental_extract(spark, str(inp), str(out), str(ckpt))
+    q.awaitTermination(120)
+    assert _batches(q) == 1
+    sink_files = [n for n in os.listdir(out) if n.endswith(".parquet")]
+    assert len(sink_files) <= spark.sparkContext.defaultParallelism
+    _assert_equals_batch(spark, str(inp), str(out))
+
+
 def test_incremental_extract_continuous_trigger(spark, tmp_path):
     """available_now=False runs the default (continuous micro-batch)
     trigger; processAllAvailable drains it to the batch result."""
